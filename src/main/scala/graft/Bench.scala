@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import scala.collection.mutable
@@ -43,19 +42,7 @@ object Bench {
     val reserveS = 40.0 // history append + final report + stop + summary
     def remainingS: Double = deadlineS - reserveS - elapsedS
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: clearState()'s blanket unpersist of the lazy
-    // localCheckpoint RDDs (Components) emits thousands of harmless
-    // "cannot be recomputed after unpersisting" WARN lines per run —
-    // the entire captured tail of BENCH_r06 was that spam.
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(cpus.toInt)
     // Message-targeted DENY filter for the one known-benign stack
     // (round 13, ADVICE r12 — the round-12 blanket DAGScheduler→FATAL
     // cut also hid stage-failure/executor-loss ERRORs, the context
@@ -94,14 +81,7 @@ object Bench {
       ctx.updateLoggers()
     }
 
-    // Several dedup/resolution queries persist() their self-joined
-    // input; dropping those blocks between queries keeps one query's
-    // cache from GC-pressuring the next (r1: a 28 s q_fact_assembly
-    // anomaly right after the biggest persisting query).
-    def clearState(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
+    def clearState(): Unit = Harness.clearState(spark)
 
     // Fixed-work CPU probe: the host has documented steal stalls, and a
     // single graded bench run can land in one. The probe times an
@@ -128,13 +108,7 @@ object Bench {
     val calibMid = mutable.ArrayBuffer[(Int, Double)]()
 
     val names = SparkEntry.queries.keys.toSeq.sorted
-    // Execute the FULL plan and discard rows: count() would let the
-    // optimizer prune every projection not needed to count (a pure
-    // derivation query would time as a bare scan); the noop sink
-    // materializes every output column.
-    def runFully(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
+    def runFully(name: String): Unit = Harness.runFully(spark, name, sfDir)
 
     // Cross-run merge (round 4): the graded artifact is one run on a
     // steal-prone host; the builder runs several full passes per round.

@@ -5,15 +5,16 @@ import org.apache.spark.sql.DataFrame
 /** Registry for frames a query builder persists but cannot unpersist
   * itself because the RETURNED lazy plan still reads them (guide §5:
   * unpersist when done — but "done" is after the caller's terminal
-  * action, outside the builder). The graded harnesses already drop
-  * every persisted RDD between queries (Bench/Verify clearState);
-  * this queue gives LIBRARY callers the same release point, so a
-  * long-lived session embedding these builders does not leak one
-  * cached corpus per call (round-14, VERDICT r13 item 8).
+  * action, outside the builder). [[Harness.clearState]] drains it
+  * between queries; this queue gives LIBRARY callers the same release
+  * point, so a long-lived session embedding these builders does not
+  * leak one cached corpus per call (round-14, VERDICT r13 item 8).
   *
-  * Same contract as VectorQueries.releaseAdcBarriers (which predates
-  * this and stays where it is): release only after the terminal
-  * action on the returned frame. */
+  * The queue is process-wide, not per query: [[releaseAll]] also
+  * unpersists frames registered by OTHER builders whose plans have not
+  * run their terminal action yet. Those plans still return the same
+  * rows; they recompute the released input instead of reading the
+  * cache. Call it once the session's pending actions are done. */
 object CacheReleases {
   private val queue =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
@@ -27,4 +28,7 @@ object CacheReleases {
     var df = queue.poll()
     while (df != null) { df.unpersist(false); df = queue.poll() }
   }
+
+  /** True when no registered frame awaits release. */
+  private[graft] def isEmpty: Boolean = queue.isEmpty
 }

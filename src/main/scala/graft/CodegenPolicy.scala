@@ -40,8 +40,7 @@ import org.apache.spark.sql.SparkSession
   * between sequentially-run queries. Scale note: the flagged set's
   * method-size pathology is data-independent (bytecode size does not
   * grow with rows, and the interpretation penalty is per-row), so the
-  * unfused choice holds at any corpus size; a deployment that wants
-  * fusion back can set -Dgraft.codegenPolicy=off. */
+  * unfused choice holds at any corpus size. */
 object CodegenPolicy {
   /** Queries whose fused whole-stage methods blow the JIT method
     * limit; run them with per-operator codegen instead. */
@@ -55,7 +54,6 @@ object CodegenPolicy {
     "q_stream_scd2_parity")
 
   def apply(spark: SparkSession, name: String): Unit = {
-    if (sys.props.get("graft.codegenPolicy").contains("off")) return
     spark.conf.set("spark.sql.codegen.wholeStage",
       (!WholeStageOff(name)).toString)
   }

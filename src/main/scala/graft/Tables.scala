@@ -206,9 +206,8 @@ object Tables {
     // are deleted at the top of every builder and never resumed; a
     // durable production checkpoint on real storage keeps the default
     // (this conf is scoped to the parity builders, same as
-    // minBatchesToRetain). Probe override: -Dgraft.stream.ckChecksum.
-    spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-      sys.props.getOrElse("graft.stream.ckChecksum", "false"))
+    // minBatchesToRetain).
+    spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
     // Round-14 measured NEGATIVE, recorded so it is not retried: a
     // pure-java.nio CheckpointFileManager (no Hadoop local-FS chmod/ls
     // process forks, no checksum machinery) A/B'd flat-to-slower over
@@ -257,9 +256,7 @@ object Tables {
     // With the session pinned to UTC the two flavors are numerically
     // identical, so read both as TIMESTAMP.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    graft.functions.VectorExpressions.register(spark)
-    graft.functions.TextExpressions.register(spark)
-    graft.functions.BloomFunctions.register(spark)
+    graft.functions.GraftExtensions.register(spark)
   }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {

@@ -2,11 +2,8 @@ package graft.functions
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -82,27 +79,5 @@ object BloomFunctions {
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def regN(name: String, arity: Int, build: Seq[Expression] => Expression): Unit = {
-      val id = FunctionIdentifier(name)
-      if (!reg.functionExists(id)) {
-        reg.registerFunction(
-          id,
-          new ExpressionInfo(BloomFunctions.getClass.getCanonicalName, name),
-          (exprs: Seq[Expression]) => {
-            require(exprs.length == arity, s"$name expects $arity arguments")
-            build(exprs)
-          })
-      }
-    }
-    regN("graft_bloom_agg", 3,
-      es => new BloomFilterAggregate(es(0), es(1), es(2)).toAggregateExpression())
-    regN("graft_bloom_contains", 2,
-      es => BloomFilterMightContain(es(0), es(1)))
-    regN("graft_bloom_sharded", 2,
-      es => ShardedBloomContains(es(0), es(1)))
   }
 }

@@ -1,126 +1,85 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.types.IntegerType
 
 /** Session-extension entry point for cluster deployments:
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions`
-  * injects the native vector expressions into every session built from
-  * that config (the in-process path uses VectorExpressions.register).
+  * injects the native functions into every session built from that
+  * config. The in-process path ([[GraftExtensions.register]], called
+  * by Tables.ensureConf) reads the same table.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, arity, build) =>
+      ext.injectFunction((FunctionIdentifier(name), GraftExtensions.info(name),
+        GraftExtensions.checked(name, arity, build)))
+    }
+}
+
+object GraftExtensions {
+  import TextExpressions._
   import VectorExpressions._
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    // Same arity contract as the FunctionRegistry.regN path: a
-    // wrong-arity SQL call should fail with a clear message at analysis
-    // time, not an IndexOutOfBoundsException (and never silently drop
-    // extra arguments).
-    def arity(name: String, n: Int, es: Seq[Expression]): Seq[Expression] = {
-      require(es.length == n, s"$name takes $n argument(s), got ${es.length}")
-      es
+  /** Every native function the query layer calls by name:
+    * (SQL name, arity, builder over exactly `arity` arguments). */
+  private val functions: Seq[(String, Int, Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", 2, es => ArrayDotProduct(es(0), es(1))),
+    ("graft_scale_div", 2, es => ArrayScaleDivide(es(0), es(1))),
+    ("graft_quantize", 1, es => QuantizeStats(es(0))),
+    ("graft_quantize1000", 1, es => Quantize1000(es(0))),
+    ("graft_lloyd_assign", 2, es => LloydAssignCentroids(es(0), es(1))),
+    ("graft_lloyd_scores", 2, es => LloydScoresCentroids(es(0), es(1))),
+    ("graft_lloyd_assign_multi", 2, es => LloydAssignMulti(es(0), es(1))),
+    ("graft_pq_adc_table", 2, es => PqAdcTableExpr(es(0), es(1))),
+    ("graft_bloom_agg", 3, es =>
+      new BloomFilterAggregate(es(0), es(1), es(2)).toAggregateExpression()),
+    ("graft_bloom_contains", 2, es => BloomFilterMightContain(es(0), es(1))),
+    ("graft_bloom_sharded", 2, es =>
+      BloomFunctions.ShardedBloomContains(es(0), es(1))),
+    ("graft_minhash", 1, es => MinHashSignature(es(0))),
+    ("graft_shingle_hashes", 1, es => ShingleHashes(es(0))),
+    ("graft_shingle_hashes_ne", 1, es => ShingleHashesNonEmpty(es(0))),
+    ("graft_word_hashes60", 1, es => WordHashes60(es(0))),
+    ("graft_simhash60", 1, es => SimHash60(es(0))),
+    ("graft_nfc", 1, es => NfcNormalize(es(0))),
+    ("graft_sampled_substrings", 1, es => SampledSubstrings32(es(0))),
+    ("graft_jaro_winkler", 2, es => JaroWinkler(es(0), es(1))),
+    ("graft_pair_overlap", 2, es => PairOverlap(es(0), es(1))),
+    // ClassGuard.collapse calls this by name; the cap must be an
+    // integer literal (it sizes the aggregation buffer)
+    ("graft_capped_roster", 2, es => es(1) match {
+      case Literal(v: Int, IntegerType) =>
+        CappedRoster(es(0), v).toAggregateExpression()
+      case other => throw new IllegalArgumentException(
+        s"graft_capped_roster cap must be an integer literal, got $other")
+    }))
+
+  /** A wrong-arity SQL call fails with a clear message at analysis
+    * time, not an IndexOutOfBoundsException (and never silently drops
+    * extra arguments). */
+  private def checked(name: String, arity: Int,
+      build: Seq[Expression] => Expression): Seq[Expression] => Expression =
+    es => {
+      require(es.length == arity, s"$name takes $arity argument(s), got ${es.length}")
+      build(es)
     }
-    def info(name: String) =
-      new ExpressionInfo(VectorExpressions.getClass.getCanonicalName, name)
-    ext.injectFunction((FunctionIdentifier("graft_dot"), info("graft_dot"),
-      (es: Seq[Expression]) => { arity("graft_dot", 2, es)
-        ArrayDotProduct(es(0), es(1)) }))
-    ext.injectFunction((FunctionIdentifier("graft_scale_div"),
-      info("graft_scale_div"),
-      (es: Seq[Expression]) => { arity("graft_scale_div", 2, es)
-        ArrayScaleDivide(es(0), es(1)) }))
-    ext.injectFunction((FunctionIdentifier("graft_quantize"),
-      info("graft_quantize"),
-      (es: Seq[Expression]) => QuantizeStats(arity("graft_quantize", 1, es).head)))
-    ext.injectFunction((FunctionIdentifier("graft_quantize1000"),
-      info("graft_quantize1000"),
-      (es: Seq[Expression]) =>
-        Quantize1000(arity("graft_quantize1000", 1, es).head)))
-    ext.injectFunction((FunctionIdentifier("graft_lloyd_assign"),
-      info("graft_lloyd_assign"),
-      (es: Seq[Expression]) => { arity("graft_lloyd_assign", 2, es)
-        LloydAssignCentroids(es(0), es(1)) }))
-    ext.injectFunction((FunctionIdentifier("graft_lloyd_scores"),
-      info("graft_lloyd_scores"),
-      (es: Seq[Expression]) => { arity("graft_lloyd_scores", 2, es)
-        LloydScoresCentroids(es(0), es(1)) }))
-    ext.injectFunction((FunctionIdentifier("graft_lloyd_assign_multi"),
-      info("graft_lloyd_assign_multi"),
-      (es: Seq[Expression]) => { arity("graft_lloyd_assign_multi", 2, es)
-        LloydAssignMulti(es(0), es(1)) }))
-    ext.injectFunction((FunctionIdentifier("graft_pq_adc_table"),
-      info("graft_pq_adc_table"),
-      (es: Seq[Expression]) => { arity("graft_pq_adc_table", 2, es)
-        PqAdcTableExpr(es(0), es(1)) }))
-    def binfo(name: String) =
-      new ExpressionInfo(BloomFunctions.getClass.getCanonicalName, name)
-    ext.injectFunction((FunctionIdentifier("graft_bloom_agg"),
-      binfo("graft_bloom_agg"),
-      (es: Seq[Expression]) => { arity("graft_bloom_agg", 3, es)
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          es(0), es(1), es(2)).toAggregateExpression() }))
-    ext.injectFunction((FunctionIdentifier("graft_bloom_contains"),
-      binfo("graft_bloom_contains"),
-      (es: Seq[Expression]) => { arity("graft_bloom_contains", 2, es)
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1)) }))
-    ext.injectFunction((FunctionIdentifier("graft_bloom_sharded"),
-      binfo("graft_bloom_sharded"),
-      (es: Seq[Expression]) => { arity("graft_bloom_sharded", 2, es)
-        BloomFunctions.ShardedBloomContains(es(0), es(1)) }))
-    def tinfo(name: String) =
-      new ExpressionInfo(TextExpressions.getClass.getCanonicalName, name)
-    ext.injectFunction((FunctionIdentifier("graft_minhash"),
-      tinfo("graft_minhash"),
-      (es: Seq[Expression]) =>
-        TextExpressions.MinHashSignature(arity("graft_minhash", 1, es).head)))
-    ext.injectFunction((FunctionIdentifier("graft_shingle_hashes"),
-      tinfo("graft_shingle_hashes"),
-      (es: Seq[Expression]) =>
-        TextExpressions.ShingleHashes(arity("graft_shingle_hashes", 1, es).head)))
-    ext.injectFunction((FunctionIdentifier("graft_shingle_hashes_ne"),
-      tinfo("graft_shingle_hashes_ne"),
-      (es: Seq[Expression]) => TextExpressions.ShingleHashesNonEmpty(
-        arity("graft_shingle_hashes_ne", 1, es).head)))
-    ext.injectFunction((FunctionIdentifier("graft_word_hashes60"),
-      tinfo("graft_word_hashes60"),
-      (es: Seq[Expression]) =>
-        TextExpressions.WordHashes60(arity("graft_word_hashes60", 1, es).head)))
-    ext.injectFunction((FunctionIdentifier("graft_simhash60"),
-      tinfo("graft_simhash60"),
-      (es: Seq[Expression]) =>
-        TextExpressions.SimHash60(arity("graft_simhash60", 1, es).head)))
-    ext.injectFunction((FunctionIdentifier("graft_nfc"),
-      tinfo("graft_nfc"),
-      (es: Seq[Expression]) =>
-        TextExpressions.NfcNormalize(arity("graft_nfc", 1, es).head)))
-    ext.injectFunction((FunctionIdentifier("graft_sampled_substrings"),
-      tinfo("graft_sampled_substrings"),
-      (es: Seq[Expression]) => TextExpressions.SampledSubstrings32(
-        arity("graft_sampled_substrings", 1, es).head)))
-    ext.injectFunction((FunctionIdentifier("graft_jaro_winkler"),
-      tinfo("graft_jaro_winkler"),
-      (es: Seq[Expression]) => { arity("graft_jaro_winkler", 2, es)
-        TextExpressions.JaroWinkler(es(0), es(1)) }))
-    ext.injectFunction((FunctionIdentifier("graft_pair_overlap"),
-      tinfo("graft_pair_overlap"),
-      (es: Seq[Expression]) => { arity("graft_pair_overlap", 2, es)
-        TextExpressions.PairOverlap(es(0), es(1)) }))
-    // ClassGuard.collapse calls this by name — without it an
-    // extensions-only session (no Tables.ensureConf) failed analysis
-    // on every guarded dedup query with 'unresolved function'
-    // (ADVICE r8). Same integer-literal cap contract as the
-    // FunctionRegistry path in TextExpressions.register.
-    ext.injectFunction((FunctionIdentifier("graft_capped_roster"),
-      tinfo("graft_capped_roster"),
-      (es: Seq[Expression]) => { arity("graft_capped_roster", 2, es)
-        es(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(
-              v: Int, org.apache.spark.sql.types.IntegerType) =>
-            CappedRoster(es.head, v).toAggregateExpression()
-          case other => throw new IllegalArgumentException(
-            s"graft_capped_roster cap must be an integer literal, got $other")
-        }
-      }))
+
+  private def info(name: String) =
+    new ExpressionInfo(classOf[GraftExtensions].getName, name)
+
+  /** Idempotent session-level registration; `call_function` then makes
+    * the expressions usable from the Column API without depending on
+    * version-specific Column internals. */
+  def register(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    functions.foreach { case (name, arity, build) =>
+      val id = FunctionIdentifier(name)
+      if (!reg.functionExists(id))
+        reg.registerFunction(id, info(name), checked(name, arity, build))
+    }
   }
 }

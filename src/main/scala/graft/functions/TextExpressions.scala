@@ -2,12 +2,10 @@ package graft.functions
 
 import graft.ops.TextOps
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 
 /** Native Catalyst expression for the MinHash hot path.
   *
@@ -563,50 +561,5 @@ object TextExpressions {
       })
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
-  }
-
-  /** Idempotent session-level registration (same pattern as
-    * [[VectorExpressions.register]]). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def reg1(name: String, build: Expression => Expression): Unit = {
-      val id = FunctionIdentifier(name)
-      if (!reg.functionExists(id)) {
-        reg.registerFunction(
-          id,
-          new ExpressionInfo(TextExpressions.getClass.getCanonicalName, name),
-          (exprs: Seq[Expression]) => {
-            require(exprs.length == 1, s"$name expects 1 argument")
-            build(exprs.head)
-          })
-      }
-    }
-    def reg2(name: String, build: (Expression, Expression) => Expression): Unit = {
-      val id = FunctionIdentifier(name)
-      if (!reg.functionExists(id)) {
-        reg.registerFunction(
-          id,
-          new ExpressionInfo(TextExpressions.getClass.getCanonicalName, name),
-          (exprs: Seq[Expression]) => {
-            require(exprs.length == 2, s"$name expects 2 arguments")
-            build(exprs.head, exprs(1))
-          })
-      }
-    }
-    reg2("graft_capped_roster", (c, capE) => capE match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) =>
-        CappedRoster(c, v).toAggregateExpression()
-      case other => throw new IllegalArgumentException(
-        s"graft_capped_roster cap must be an integer literal, got $other")
-    })
-    reg1("graft_minhash", MinHashSignature)
-    reg1("graft_shingle_hashes", ShingleHashes)
-    reg1("graft_shingle_hashes_ne", ShingleHashesNonEmpty)
-    reg1("graft_word_hashes60", WordHashes60)
-    reg1("graft_simhash60", SimHash60)
-    reg1("graft_nfc", NfcNormalize)
-    reg1("graft_sampled_substrings", SampledSubstrings32)
-    reg2("graft_jaro_winkler", JaroWinkler)
-    reg2("graft_pair_overlap", PairOverlap)
   }
 }

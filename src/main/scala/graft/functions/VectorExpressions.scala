@@ -1,13 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 
 /** Native Catalyst expressions for the vector hot path.
   *
@@ -488,17 +485,32 @@ object VectorExpressions {
       // full 3-level shape match (round-14 ADVICE): a wrongly nested
       // literal (array<array<double>>) or an empty outer array used to
       // pass analysis and fail at runtime inside the lazy books
-      // extraction with a ClassCastException
+      // extraction with a ClassCastException; the literal's contents are
+      // checked here too, since `books`/codegen read books(0)(0).length
+      // as the subspace width for every codeword
       case ArrayType(LongType, _) if right.foldable &&
           (right.dataType match {
             case ArrayType(ArrayType(ArrayType(DoubleType, _), _), _) => true
             case _ => false
           }) =>
         val outer = right.eval(null).asInstanceOf[ArrayData]
-        if (outer == null || outer.numElements() == 0)
-          TypeCheckResult.TypeCheckFailure(
-            s"$prettyName: codebook literal must be non-empty")
-        else TypeCheckResult.TypeCheckSuccess
+        def fail(why: String) = TypeCheckResult.TypeCheckFailure(
+          s"$prettyName: codebook literal has $why")
+        if (outer == null || outer.numElements() == 0) fail("no subspaces")
+        else {
+          val subspaces = (0 until outer.numElements()).map(m =>
+            if (outer.isNullAt(m)) null else outer.getArray(m))
+          val words = subspaces.filter(_ != null).flatMap(ks =>
+            (0 until ks.numElements()).map(j =>
+              if (ks.isNullAt(j)) null else ks.getArray(j)))
+          if (subspaces.exists(ks => ks == null || ks.numElements() == 0))
+            fail("an empty subspace")
+          else if (words.exists(c => c == null || c.numElements() == 0))
+            fail("an empty codeword")
+          else if (words.map(_.numElements()).distinct.size > 1)
+            fail("mixed codeword lengths")
+          else TypeCheckResult.TypeCheckSuccess
+        }
       case _ => TypeCheckResult.TypeCheckFailure(
         s"$prettyName expects (array<bigint>, foldable array<array<array<double>>>)")
     }
@@ -674,32 +686,5 @@ object VectorExpressions {
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
-  }
-
-  /** Idempotent session-level registration; `call_function` then makes
-    * the expressions usable from the Column API without depending on
-    * version-specific Column internals. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def regN(name: String, arity: Int, build: Seq[Expression] => Expression): Unit = {
-      val id = FunctionIdentifier(name)
-      if (!reg.functionExists(id)) {
-        reg.registerFunction(
-          id,
-          new ExpressionInfo(VectorExpressions.getClass.getCanonicalName, name),
-          (exprs: Seq[Expression]) => {
-            require(exprs.length == arity, s"$name expects $arity arguments")
-            build(exprs)
-          })
-      }
-    }
-    regN("graft_dot", 2, es => ArrayDotProduct(es(0), es(1)))
-    regN("graft_scale_div", 2, es => ArrayScaleDivide(es(0), es(1)))
-    regN("graft_quantize", 1, es => QuantizeStats(es(0)))
-    regN("graft_lloyd_assign", 2, es => LloydAssignCentroids(es(0), es(1)))
-    regN("graft_lloyd_scores", 2, es => LloydScoresCentroids(es(0), es(1)))
-    regN("graft_lloyd_assign_multi", 2, es => LloydAssignMulti(es(0), es(1)))
-    regN("graft_quantize1000", 1, es => Quantize1000(es(0)))
-    regN("graft_pq_adc_table", 2, es => PqAdcTableExpr(es(0), es(1)))
   }
 }

@@ -48,27 +48,6 @@ object Components {
     * input — fail loudly rather than ship wrong labels. */
   val MaxStarRounds = 40
 
-  /** Star/propagation rounds composed lazily per materialization: each
-    * driver round-trip (checkpoint + action) carries `Fuse` rounds of
-    * work in one job, and convergence detection coarsens to
-    * `Fuse`-round granularity (the overshoot work is harmless — both
-    * star operations and min-label propagation are idempotent on
-    * their fixpoints). MEASURED A LOSS at Fuse=2 (round-11 probe P29,
-    * interleaved same-host A/B at sf0.1): the dedup graphs converge
-    * in 1-3 propagation rounds, so the fused job re-joins the
-    * edge-sized `sym` frame for a sub-round that is usually a no-op —
-    * doubling real join work to save one scheduler trip (interleaved
-    * medians: apply 2.90 -> 5.15 s, semantic_clusters 3.52 -> 4.37 s,
-    * components flat).
-    * Production stays at 1; the knob remains for the probe
-    * (-Dgraft.components.fuse=2). Clamped to ≥ 1: a zero or negative
-    * override would make every phase run zero rounds per
-    * materialization, trivially "converge", and silently return
-    * unconverged labels. */
-  private def Fuse: Int =
-    sys.props.get("graft.components.fuse").map(_.toInt).map(math.max(1, _))
-      .getOrElse(1)
-
   /** Round-13 (optimization guide §1/§2): AQE re-plans every exchange
     * of every round as its own materialized stage — a star round's
     * explode→window→window→distinct chain became ~6 sequential driver
@@ -86,10 +65,8 @@ object Components {
     * checkpointed frontier. Window-min rounds have no joins for AQE
     * to re-strategize and window skew (a hub key) is untouched by
     * partition coalescing, so the trade is latency-for-nothing at
-    * every scale. Probe override: -Dgraft.components.loopAqe=true
-    * keeps AQE on inside the loop (the P44 A/B's control arm).
-    * Conf is restored on exit; the RETURNED frame executes under the
-    * caller's conf.
+    * every scale. Conf is restored on exit; the RETURNED frame
+    * executes under the caller's conf.
     *
     * THREADING (round-14 ADVICE): this mutates the SESSION-global SQL
     * conf for the loop's duration — any query submitted concurrently
@@ -102,7 +79,6 @@ object Components {
     * (spark.newSession) instead. */
   private def withLoopConf[A](df: DataFrame, parts: Int)(body: => A): A = {
     val spark = df.sparkSession
-    if (sys.props.get("graft.components.loopAqe").contains("true")) return body
     val aqeKey = "spark.sql.adaptive.enabled"
     val spKey = "spark.sql.shuffle.partitions"
     val aqePrev = spark.conf.get(aqeKey)
@@ -168,10 +144,13 @@ object Components {
     var converged = false
     var rounds = 0
     while (!converged && rounds < escalateAfter) {
-      // `Fuse` rounds composed lazily, ONE lazy checkpoint + ONE action
-      // (the convergence count) per driver round-trip — see the Fuse
-      // scaladoc. Converged ⇔ the LAST sub-round was a fixpoint (its
-      // chg column is what survives the composition).
+      // ONE round per driver round-trip: one lazy checkpoint + one
+      // action (the convergence count). Fusing two rounds per job was
+      // MEASURED A LOSS (round-11 P29, interleaved A/B at sf0.1): the
+      // dedup graphs converge in 1-3 rounds, so the fused job re-joins
+      // the edge-sized `sym` frame for a sub-round that is usually a
+      // no-op (q_dedup_apply 2.90 -> 5.15 s, q_semantic_clusters
+      // 3.52 -> 4.37 s, q_dedup_components flat).
       // NOTE (round 13): the propagation loop deliberately KEEPS AQE —
       // unlike the window-only star rounds, each propagation round is
       // a sym⋈labels JOIN, and AQE's runtime broadcast conversion of
@@ -180,13 +159,10 @@ object Components {
       // AQE-off: q_dedup_components 4.98 → 5.69 s, q_dedup_apply
       // 4.24 → 4.88 s — a measured NEGATIVE, recorded here so it is
       // not retried).
-      val k = math.min(Fuse, escalateAfter - rounds)
-      var nxt = propagate(labels)
-      for (_ <- 2 to k) nxt = propagate(nxt.select(col("vtx"), col("comp")))
-      val next = nxt.localCheckpoint(eager = false)
+      val next = propagate(labels).localCheckpoint(eager = false)
       converged = next.filter(col("chg")).count() == 0L
       labels = next.select(col("vtx"), col("comp"))
-      rounds += k
+      rounds += 1
     }
     if (converged) {
       sym.unpersist(false)
@@ -261,20 +237,12 @@ object Components {
     // under the pinned-conf block (withLoopConf scaladoc).
     withLoopConf(cur0, cur0.rdd.getNumPartitions) {
       while (!converged && rounds < maxStarRounds) {
-        // `Fuse` rounds per materialization (Components.Fuse scaladoc):
-        // the signature gate then compares states Fuse rounds apart, so
-        // detection can land up to one extra fused job late — idempotent
-        // no-op rounds, bounded, and cheaper than the driver round-trips
-        // saved (round-11 P29).
-        val k = math.min(Fuse, maxStarRounds - rounds)
-        var nxt = cur
-        for (_ <- 1 to k) nxt = oneRound(nxt)
-        val ss = nxt.localCheckpoint(eager = false) // signature() materializes
+        val ss = oneRound(cur).localCheckpoint(eager = false) // signature() materializes
         val sig = signature(ss)
         converged = sig == prevSig && ss.exceptAll(cur).isEmpty
         prevSig = sig
         cur = ss
-        rounds += k
+        rounds += 1
       }
     }
     require(converged,

@@ -75,7 +75,7 @@ object VectorOps {
     * one codegen'd loop over the ArrayData buffers instead of a
     * 129-node unrolled tree. Same left-assoc accumulation →
     * bit-identical to [[dotUnrolled]]. Requires
-    * VectorExpressions.register (done in Tables.ensureConf). */
+    * GraftExtensions.register (done in Tables.ensureConf). */
   def dotNative(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
   /** Native normalized projection: vn = v / sqrt(dot(v, v)), two

@@ -34,11 +34,7 @@ object StreamQueries {
       spark: org.apache.spark.sql.SparkSession, n: Int)(body: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    // Probe-only override (graft.dev P28 partition-curve sweeps); the
-    // production value is the builder's argument.
-    val eff = sys.props.get("graft.stream.statePartitions")
-      .map(_.toInt).getOrElse(n)
-    spark.conf.set(key, eff.toString)
+    spark.conf.set(key, n.toString)
     try body finally spark.conf.set(key, prev)
   }
 

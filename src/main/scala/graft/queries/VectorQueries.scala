@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{CacheReleases, Q, Tables}
 import graft.ops.VectorOps._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -423,7 +423,7 @@ object VectorQueries {
         // (lloydTrainMulti); the persisted lineage is read ~3 times
         // total instead of ~9; registered for release (round 13)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      adcBarriers.add(base)
+      CacheReleases.register(base)
       val vqCols = (0 until PqM).map(m => s"vq_$m")
       val cents = graft.ops.KMeans.lloydTrainMulti(base, vqCols, "vec_id", PqK, PqSub, 2)
       val cur = graft.ops.KMeans.assignMulti(base, "vq", cents,
@@ -476,54 +476,37 @@ object VectorQueries {
     * 256-byte floats), the per-query table is built once and
     * broadcast with the query set, and scoring is M integer-indexed
     * branches in codegen. Training + encoding reuse the PQ
-    * machinery; the scan cost is O(corpus × M), not O(corpus × Dims). */
-  /** Parameterized ADC top-10 (the q_ann_pq_adc plan at any (M, k)
-    * geometry): shared by the registered query at (PqM, PqK) and the
-    * P33 bits-vs-recall sweep. */
-  /** The live codegen-barrier frames [[pqAdcTopk]] persists (one per
-    * call — the barrier belongs to the RETURNED plan, so the builder
-    * cannot drop it itself). The graded harnesses need no action:
-    * Verify/Bench clearCache() between queries. Callers that build
-    * repeatedly in one session (P33's sweep, ad-hoc recall probes)
-    * release them with [[releaseAdcBarriers]] after their terminal
-    * action, or they leak one cached frame per build (round-12
-    * ADVICE). */
-  private val adcBarriers =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-  private[graft] def releaseAdcBarriers(): Unit = {
-    var df = adcBarriers.poll()
-    while (df != null) { df.unpersist(); df = adcBarriers.poll() }
-  }
-
-  private[graft] def pqAdcTopk(spark: SparkSession, dir: String,
-      pm: Int, pk: Int, iters: Int = PqIters): DataFrame = {
-    val sub = Dims / pm
+    * machinery; the scan cost is O(corpus × M), not O(corpus × Dims).
+    *
+    * The frames it persists belong to the RETURNED plan, so they are
+    * registered in [[CacheReleases]] for release after the caller's
+    * terminal action. */
+  private def pqAdcTopk(spark: SparkSession, dir: String): DataFrame = {
     val base = withNormalizedNative(load(spark, dir, "embeddings"), "embedding", "vn")
       .select(col("vec_id"), col("vn"),
         graft.ops.KMeans.quantize1000(col("vn")).as("vq"))
-      .select(col("vec_id") +: col("vn") +: col("vq") +: (0 until pm).map(m =>
-        slice(col("vq"), m * sub + 1, sub).as(s"vq_$m")): _*)
+      .select(col("vec_id") +: col("vn") +: col("vq") +: (0 until PqM).map(m =>
+        slice(col("vq"), m * PqSub + 1, PqSub).as(s"vq_$m")): _*)
       // persisted for the TRAINING actions AND the post-training
       // consumers (encode scan, query table — each would otherwise
-      // re-derive the row-local prep); registered in adcBarriers like
-      // the corpus barrier below, so sweep callers can release it and
-      // the graded harnesses clearCache between queries (round 13 —
-      // the unpersist-after-training form re-derived prep twice).
+      // re-derive the row-local prep); registered for release like
+      // the corpus barrier below (round 13 — the
+      // unpersist-after-training form re-derived prep twice).
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    adcBarriers.add(base)
+    CacheReleases.register(base)
     val cents = graft.ops.KMeans.lloydTrainMulti(base,
-      (0 until pm).map(m => s"vq_$m"), "vec_id", pk, sub, iters)
+      (0 until PqM).map(m => s"vq_$m"), "vec_id", PqK, PqSub, PqIters)
     val coded = graft.ops.KMeans.assignMulti(base, "vq", cents,
-      (0 until pm).map(m => s"code_$m"))
+      (0 until PqM).map(m => s"code_$m"))
     // materialize the codes: encode-once-scan-codes is the PQ
     // contract, and without the barrier codegen fuses all the
     // assignment projections (~2k product terms) into the rank
     // sort's method, which blows the 64 KB limit and runs
     // interpreted (measured: 2.3-5.4 s → ~1 s at sf0.1)
     val corpus = coded.select(col("vec_id") +:
-      (0 until pm).map(m => col(s"code_$m")): _*)
+      (0 until PqM).map(m => col(s"code_$m")): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    adcBarriers.add(corpus)
+    CacheReleases.register(corpus)
     // per-query ADC table: d[m·k+j] = q-subvector · codeword j of
     // subspace m, computed ONCE per query as a single native-
     // expression array (exact vn doubles, left-assoc i order —
@@ -534,8 +517,8 @@ object VectorQueries {
       .select(col("vec_id").as("q_id"),
         call_function("graft_pq_adc_table", col("vn"),
           typedLit(cents.map(_.map(_.c.toSeq)))).as("adc"))
-    val sim = (0 until pm).map(m =>
-      element_at(col("adc"), col(s"code_$m") + lit(m * pk + 1)))
+    val sim = (0 until PqM).map(m =>
+      element_at(col("adc"), col(s"code_$m") + lit(m * PqK + 1)))
       .reduceLeft(_ + _)
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("sim").desc, col("vec_id").asc)
@@ -554,7 +537,7 @@ object VectorQueries {
     "q_ann_pq_adc",
     (spark, dir) => {
       Tables.ensureConf(spark)
-      pqAdcTopk(spark, dir, PqM, PqK)
+      pqAdcTopk(spark, dir)
     },
     Some {
       def qdot(m: Int): String =
@@ -766,9 +749,6 @@ object VectorQueries {
     * it in ONE map-side-combinable exchange over a single pass, so the
     * top-k frame has exactly one consumer and the persist (plus its
     * materialization cost) is gone. */
-  private[graft] def knnEdgesForDev(spark: SparkSession, dir: String): DataFrame =
-    knnEdges(spark, dir)
-
   private def knnEdges(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
     // bounded driver action: ONE scalar (corpus size) → plane count;
@@ -1180,26 +1160,20 @@ object VectorQueries {
     * deployment k grows with the corpus (k ≈ √N is customary) at fixed
     * nprobe, so per-query work SHRINKS relative to N; nothing
     * corpus-sized ever reaches the driver or a single partition. */
-  private[graft] def ivfTrainedCandidates(spark: SparkSession, dir: String,
-      k: Int = IvfK, nprobe: Int = IvfProbe): DataFrame =
-    ivfTrainedChain(spark, dir, k, nprobe)._1
-
-  /** [[ivfTrainedCandidates]] plus its persisted prep frame — see
-    * [[ivfPqChain]]. */
-  private def ivfTrainedChain(spark: SparkSession, dir: String,
-      k: Int = IvfK, nprobe: Int = IvfProbe): (DataFrame, DataFrame) = {
+  private def ivfTrainedChain(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
     val base = withNormalizedNative(load(spark, dir, "embeddings"), "embedding", "vn")
       .select(col("vec_id"), col("vn"),
         graft.ops.KMeans.quantize1000(col("vn")).as("vq"))
       // persisted for the TRAINING actions and the two downstream
       // consumers (corpus assign, query probes), which would otherwise
       // re-derive the row-local normalize+quantize from the scan;
-      // registered in adcBarriers so sweep callers can release it
-      // (round 13 — the registry pattern replaces the
-      // unpersist-after-training form, same leak guarantee).
+      // registered for release (round 13 — the registry pattern
+      // replaces the unpersist-after-training form, same leak
+      // guarantee).
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    adcBarriers.add(base)
-    val cents = graft.ops.KMeans.lloydTrain(base, "vq", "vec_id", k, Dims, 2)
+    CacheReleases.register(base)
+    val cents = graft.ops.KMeans.lloydTrain(base, "vq", "vec_id", IvfK, Dims, 2)
     val corpus = graft.ops.KMeans.assign(base, "vq", cents, "cell")
       .select(col("vec_id"), col("vn"), col("cell"))
     val centsLit = typedLit(cents.sortBy(_.j).map(_.c.toSeq))
@@ -1210,7 +1184,7 @@ object VectorQueries {
         posexplode(call_function("graft_lloyd_scores", col("vq"), centsLit))
           .as(Seq("cell", "m")))
       .withColumn("pr", row_number().over(pw))
-      .filter(col("pr") <= nprobe)
+      .filter(col("pr") <= IvfProbe)
       .select(col("q_id"), col("qn"), col("cell"))
     val cand = corpus.join(broadcast(probes), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
@@ -1331,7 +1305,7 @@ object VectorQueries {
       Tables.ensureConf(spark)
       val w = Window.partitionBy(col("q_id"))
         .orderBy(col("cos").desc, col("vec_id").asc)
-      ivfTrainedCandidates(spark, dir)
+      ivfTrainedChain(spark, dir)._1
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 10)
         .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"))
@@ -1435,18 +1409,14 @@ object VectorQueries {
 
   /** ADC-ranked candidates for the IVF-PQ chain: (q_id, vec_id,
     * adc_rk) for every vector in the query's probed cells, ranked per
-    * query by (ADC sim desc, vec_id asc). The caller applies the
-    * shortlist cut + exact re-rank. */
-  private[graft] def ivfPqAdcRanked(spark: SparkSession, dir: String,
-      nprobe: Int = IvfPqProbe): DataFrame =
-    ivfPqChain(spark, dir, nprobe)._1
-
-  /** [[ivfPqAdcRanked]] plus the persisted prep frame (vec_id, vn, vq,
-    * vq_m…) it trained on, so downstream consumers (exact re-rank)
-    * can reuse the cached normalize+quantize instead of re-deriving it
-    * from the parquet scan (round 13 — same values, one less pass). */
-  private def ivfPqChain(spark: SparkSession, dir: String,
-      nprobe: Int): (DataFrame, DataFrame) = {
+    * query by (ADC sim desc, vec_id asc); the caller applies the
+    * shortlist cut + exact re-rank. Returned with the persisted prep
+    * frame (vec_id, vn, vq, vq_m…) it trained on, so downstream
+    * consumers (exact re-rank) can reuse the cached normalize+quantize
+    * instead of re-deriving it from the parquet scan (round 13 — same
+    * values, one less pass). */
+  private def ivfPqChain(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
     val vqCols = (0 until PqM).map(m => s"vq_$m")
     val base = withNormalizedNative(load(spark, dir, "embeddings"), "embedding", "vn")
       .select(col("vec_id"), col("vn"),
@@ -1457,7 +1427,7 @@ object VectorQueries {
       // consumers (corpus encode, probe side, re-rank vectors);
       // registered for release like the corpus barrier (round 13)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    adcBarriers.add(base)
+    CacheReleases.register(base)
     // cells + codebooks trained JOINTLY: one seed collect serves both
     // and the two update aggregates overlap (2 driver actions instead
     // of 4; values identical — see lloydTrainJoint)
@@ -1474,7 +1444,7 @@ object VectorQueries {
     val corpus = coded.select(col("vec_id") +: col("cell") +:
       (0 until PqM).map(m => col(s"code_$m")): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    adcBarriers.add(corpus)
+    CacheReleases.register(corpus)
     // query side: rank ALL cells with the assignment metric, probe the
     // IvfPqProbe best; the per-query ADC table rides along (one array
     // per query row, broadcast)
@@ -1489,7 +1459,7 @@ object VectorQueries {
         posexplode(call_function("graft_lloyd_scores", col("vq"), centsLit))
           .as(Seq("cell", "m")))
       .withColumn("pr", row_number().over(pw))
-      .filter(col("pr") <= nprobe)
+      .filter(col("pr") <= IvfPqProbe)
       .select(col("q_id"), col("cell"), col("adc"))
     val sim = (0 until PqM).map(m =>
       element_at(col("adc"), col(s"code_$m") + lit(m * PqK + 1)))
@@ -1506,16 +1476,13 @@ object VectorQueries {
 
   /** Exact re-rank of the ADC shortlist: join the top-(N div 8) rows
     * per query back to the full normalized vectors and score true
-    * dots. Returns (q_id, vec_id, cos). `vecsFrom` (when given) is a
-    * frame already carrying (vec_id, vn) — the chain's cached prep —
-    * so the vectors aren't re-derived from the scan; the values are
-    * the same normalize chain either way. */
-  private[graft] def ivfPqReranked(spark: SparkSession, dir: String,
-      ranked: DataFrame, vecsFrom: Option[DataFrame] = None): DataFrame = {
+    * dots. Returns (q_id, vec_id, cos). `prep` is the chain's cached
+    * frame carrying (vec_id, vn), so the vectors aren't re-derived
+    * from the scan. */
+  private def ivfPqReranked(spark: SparkSession, dir: String,
+      ranked: DataFrame, prep: DataFrame): DataFrame = {
     val c = rerankBudget(corpusSize(spark, dir))
-    val vecs = vecsFrom.getOrElse(
-        withNormalizedNative(load(spark, dir, "embeddings"), "embedding", "vn"))
-      .select(col("vec_id"), col("vn"))
+    val vecs = prep.select(col("vec_id"), col("vn"))
     val qvecs = vecs.filter(col("vec_id") % 50 === 0 && col("vec_id") < 25000)
       .select(col("vec_id").as("q_id"), col("vn").as("qn"))
     ranked.filter(col("adc_rk") <= c)
@@ -1539,8 +1506,8 @@ object VectorQueries {
       Tables.ensureConf(spark)
       val w = Window.partitionBy(col("q_id"))
         .orderBy(col("cos").desc, col("vec_id").asc)
-      val (ranked, prep) = ivfPqChain(spark, dir, IvfPqProbe)
-      ivfPqReranked(spark, dir, ranked, Some(prep))
+      val (ranked, prep) = ivfPqChain(spark, dir)
+      ivfPqReranked(spark, dir, ranked, prep)
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 10)
         .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"))
@@ -1563,8 +1530,8 @@ object VectorQueries {
     "q_ann_ivfpq_recall",
     (spark, dir) => {
       Tables.ensureConf(spark)
-      val (ranked, prep) = ivfPqChain(spark, dir, IvfPqProbe)
-      val rr = ivfPqReranked(spark, dir, ranked, Some(prep))
+      val (ranked, prep) = ivfPqChain(spark, dir)
+      val rr = ivfPqReranked(spark, dir, ranked, prep)
       val w = Window.partitionBy(col("q_id"))
         .orderBy(col("cos").desc, col("vec_id").asc)
       val ap = rr.withColumn("rank", row_number().over(w))

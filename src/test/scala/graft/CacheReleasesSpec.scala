@@ -13,14 +13,20 @@ class CacheReleasesSpec extends SparkSpec {
   }
 
   test("q_lm_perplexity persists are released by CacheReleases") {
-    clearAll() // other suites share this session; start from zero
-    val df = SparkEntry.queries("q_lm_perplexity")(spark, dir)
-    df.write.mode("overwrite").format("noop").save() // terminal action
-    assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
-      "sanity: the builder should have persisted its shared frames")
-    CacheReleases.releaseAll()
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
-      "releaseAll must drop every registered persist")
+    // q_ann_pq_adc: its codegen-barrier frames share the one registry
+    Seq("q_lm_perplexity", "q_ann_pq_adc").foreach { name =>
+      clearAll() // other suites share this session; start from zero
+      CacheReleases.releaseAll()
+      val df = SparkEntry.queries(name)(spark, dir)
+      df.write.mode("overwrite").format("noop").save() // terminal action
+      assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
+        s"sanity: $name should have persisted its shared frames")
+      CacheReleases.releaseAll()
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+        s"$name: releaseAll must drop every registered persist")
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"$name: releaseAll must leave no cached data")
+    }
   }
 
   test("q_cms_heavy_hitters leaves no persistent RDDs behind") {
@@ -29,5 +35,14 @@ class CacheReleasesSpec extends SparkSpec {
     df.write.mode("overwrite").format("noop").save()
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       "the builder unpersists its terms frame after its driver probes")
+  }
+
+  test("Harness.clearState drops every persist and drains the release queue") {
+    clearAll()
+    Harness.runFully(spark, "q_lm_perplexity", dir)
+    assert(!CacheReleases.isEmpty, "sanity: the builder registered its frames")
+    Harness.clearState(spark)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    assert(CacheReleases.isEmpty)
   }
 }

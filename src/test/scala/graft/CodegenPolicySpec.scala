@@ -20,8 +20,7 @@ class CodegenPolicySpec extends SparkSpec {
       "non-flagged query must restore the default")
     // release the lazy frames' caches (q_scd2_fold persists nothing,
     // but keep the shared session clean for other suites)
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    Harness.clearState(spark)
   }
 
   test("flagged query results are identical under both codegen modes") {
@@ -36,7 +35,6 @@ class CodegenPolicySpec extends SparkSpec {
     val fused = rows("true")
     val unfused = rows("false")
     assert(fused == unfused, "codegen mode must not change results")
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    Harness.clearState(spark)
   }
 }

@@ -578,8 +578,7 @@ class CurationSpec extends SparkSpec {
       assert(top3(a).contains((b, bp)) && top3(b).contains((a, bp)),
         s"edge ($a,$b,$bp) not mutual in independently recomputed top-3")
     }
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    Harness.clearState(spark)
   }
 
   test("q_semantic_clusters is consistent with the mutual-kNN edge set") {
@@ -599,8 +598,7 @@ class CurationSpec extends SparkSpec {
     clusters.groupBy(_._2).foreach { case (label, members) =>
       assert(label == members.keys.min, s"cluster $label label != min member")
     }
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    Harness.clearState(spark)
   }
 
   test("q_audio_frames: frame sums recombine to q_multimodal_audio sample sums") {

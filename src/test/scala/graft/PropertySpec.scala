@@ -118,7 +118,7 @@ class PropertySpec extends SparkSpec {
     // the trained-IVF probe ranks cells by the scores array; its best
     // cell must be exactly the cell the assignment kernel picks, or
     // probe-1 IVF would diverge from the corpus partition
-    graft.functions.VectorExpressions.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val vecGen = Gen.listOfN(4, Gen.choose(-50L, 50L)).map(_.toSeq)
     val centGen = Gen.listOfN(5, Gen.listOfN(4,
       Gen.choose(-50, 50).map(_.toDouble)).map(_.toSeq)).map(_.toSeq)
@@ -144,7 +144,7 @@ class PropertySpec extends SparkSpec {
     // the native kernel must reproduce cast(round(x*1000) as bigint)
     // bit-for-bit, including values adjacent to .5 boundaries
     import graft.ops.KMeans
-    graft.functions.VectorExpressions.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val edgy = Gen.oneOf(
       Gen.choose(-1.0, 1.0),
       Gen.choose(-1000, 1000).map(t => (t + 0.5) / 1000.0),
@@ -171,7 +171,7 @@ class PropertySpec extends SparkSpec {
     // assign(slice(vq, m·sub+1, sub)) calls picked, for arbitrary
     // books (including duplicate centroids → smallest-j ties)
     import graft.ops.KMeans
-    graft.functions.VectorExpressions.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val M = 3; val sub = 4; val k = 5
     val vecGen = Gen.listOfN(M * sub, Gen.choose(-50L, 50L)).map(_.toSeq)
     val bookGen = Gen.listOfN(M, Gen.listOfN(k, Gen.listOfN(sub,
@@ -289,7 +289,7 @@ class PropertySpec extends SparkSpec {
     // the q_ngram_novelty kernel: distinct shingles, empty STRING
     // dropped pre-hash, then stringHash — including texts that produce
     // the empty whole-doc shingle (blank text)
-    graft.functions.TextExpressions.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val textGen = Gen.oneOf(
       Gen.const(""),
       Gen.const("   "),

@@ -13,19 +13,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.timeParserPolicy", "LEGACY")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    graft.functions.VectorExpressions.register(s)
-    graft.functions.TextExpressions.register(s)
-    graft.functions.BloomFunctions.register(s)
+    val s = Harness.session(4)
+    s.conf.set("spark.sql.legacy.timeParserPolicy", "LEGACY")
+    graft.functions.GraftExtensions.register(s)
     s
   }
 }

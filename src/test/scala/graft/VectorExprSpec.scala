@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.VectorExpressions
+import graft.functions.GraftExtensions
 import graft.ops.VectorOps
 import org.apache.spark.sql.functions._
 
@@ -20,7 +20,7 @@ class VectorExprSpec extends SparkSpec {
   ).toDF("id", "vf", "vd")
 
   test("graft_dot is bit-identical to the unrolled built-in form") {
-    VectorExpressions.register(spark)
+    GraftExtensions.register(spark)
     val d = df
       .withColumn("vfd", VectorOps.toDoublesUnrolled(col("vf"), dims))
       .withColumn("native", VectorOps.dotNative(col("vfd"), col("vd")))
@@ -33,7 +33,7 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("graft_dot widens float arrays exactly (no pre-cast needed)") {
-    VectorExpressions.register(spark)
+    GraftExtensions.register(spark)
     val d = df
       .withColumn("direct", VectorOps.dotNative(col("vf"), col("vd")))
       .withColumn("viaCast", VectorOps.dotNative(
@@ -46,7 +46,7 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("withNormalizedNative matches withNormalized bitwise") {
-    VectorExpressions.register(spark)
+    GraftExtensions.register(spark)
     val a = VectorOps.withNormalizedNative(df, "vf", "vn")
       .select("id", "vn").as[(Long, Array[Double])].collect().toMap
     val b = VectorOps.withNormalized(df, "vf", "vn", dims)
@@ -61,7 +61,7 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("null array input yields null, not a crash") {
-    VectorExpressions.register(spark)
+    GraftExtensions.register(spark)
     val d = Seq((1L, Option.empty[Array[Double]], Array(1.0, 2.0)))
       .toDF("id", "a", "b")
       .withColumn("dot", VectorOps.dotNative(col("a"), col("b")))
@@ -72,7 +72,7 @@ class VectorExprSpec extends SparkSpec {
   test("expressions run inside whole-stage codegen") {
     // a parquet scan, not a local Seq: ConvertToLocalRelation folds
     // in-memory inputs away before any physical plan exists
-    VectorExpressions.register(spark)
+    GraftExtensions.register(spark)
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val plan = VectorOps.withNormalizedNative(e, "embedding", "vn")
       .withColumn("dot", VectorOps.dotNative(col("vn"), col("vn")))
@@ -86,13 +86,13 @@ class VectorExprSpec extends SparkSpec {
     // the hook cluster deployments reach via
     // spark.sql.extensions=graft.functions.GraftExtensions
     val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.functions.GraftExtensions().apply(ext)
-    // full parity with TextExpressions.register + VectorExpressions
-    // .register + BloomFunctions: an extensions-only session (no
-    // Tables.ensureConf) must resolve every function the query layer
-    // calls by name — graft_capped_roster especially, or every
-    // ClassGuard-guarded dedup query fails analysis (ADVICE r8).
-    assert(org.apache.spark.sql.GraftExtensionsBridge.injectedNames(ext)
+    new GraftExtensions().apply(ext)
+    // an extensions-only session (no Tables.ensureConf) must resolve
+    // every function the query layer calls by name —
+    // graft_capped_roster especially, or every ClassGuard-guarded
+    // dedup query fails analysis (ADVICE r8).
+    val injected = org.apache.spark.sql.GraftExtensionsBridge.injectedNames(ext)
+    assert(injected
       === Set("graft_dot", "graft_scale_div", "graft_quantize",
         "graft_quantize1000", "graft_lloyd_assign", "graft_lloyd_scores",
         "graft_lloyd_assign_multi", "graft_pq_adc_table",
@@ -101,10 +101,32 @@ class VectorExprSpec extends SparkSpec {
         "graft_simhash60", "graft_nfc", "graft_sampled_substrings",
         "graft_jaro_winkler", "graft_pair_overlap", "graft_capped_roster",
         "graft_bloom_agg", "graft_bloom_contains", "graft_bloom_sharded"))
+    // and the in-process registration path resolves exactly that set
+    GraftExtensions.register(spark)
+    val registered = spark.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("graft_")).toSet
+    assert(registered === injected)
+  }
+
+  test("graft_lloyd_assign_multi rejects malformed codebook literals at analysis time") {
+    GraftExtensions.register(spark)
+    val vq = Seq((1L, Array(1L, 2L, 3L, 4L))).toDF("id", "vq")
+    def assign(books: Seq[Seq[Seq[Double]]]) =
+      vq.select(call_function("graft_lloyd_assign_multi", col("vq"), typedLit(books)))
+    // well-formed: 2 subspaces × 2 codewords × 2 dims
+    assert(assign(Seq(Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)),
+      Seq(Seq(1.0, 1.0), Seq(2.0, 2.0)))).as[Seq[Int]].head() === Seq(1, 1))
+    def rejected(books: Seq[Seq[Seq[Double]]], why: String): Unit = {
+      val e = intercept[org.apache.spark.sql.AnalysisException](assign(books))
+      assert(e.getMessage.contains(why), e.getMessage)
+    }
+    rejected(Seq(Seq(Seq(1.0, 0.0)), Seq.empty), "empty subspace")
+    rejected(Seq(Seq(Seq(1.0, 0.0)), Seq(Seq.empty[Double])), "empty codeword")
+    rejected(Seq(Seq(Seq(1.0, 0.0), Seq(1.0))), "mixed codeword lengths")
   }
 
   test("SQL surface works after registration") {
-    VectorExpressions.register(spark)
+    GraftExtensions.register(spark)
     df.createOrReplaceTempView("vec_test")
     val r = spark.sql(
       "SELECT graft_dot(vd, vd) AS d FROM vec_test WHERE id = 2")

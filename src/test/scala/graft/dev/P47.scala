@@ -1,36 +1,20 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
+import graft.Harness
 import scala.collection.mutable
 
-/** P47 (round 14): where does the DRIVER spend the stream parities'
-  * wall? P40 shows jobs cover only ~45% of wall; P42 samples executor
-  * workers only. This samples EVERY thread every 50 ms while a stream
-  * query runs and histograms RUNNABLE non-executor threads by their
-  * deepest org.apache.spark frame.
+/** Driver-side thread sampler: where does a query's wall go outside
+  * its executor tasks? Samples EVERY thread every 50 ms while the
+  * query runs (after one warm run) and histograms RUNNABLE
+  * non-executor threads by their first Spark/Hadoop/graft frame.
   * Usage: Test/runMain graft.dev.P47 <sfDir> <query...> */
 object P47 {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val names = args.drop(1)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def clearState(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
-    def runFully(name: String): Unit =
-      graft.SparkEntry.queries(name)(spark, dir)
-        .write.mode("overwrite").format("noop").save()
-
+    val spark = Harness.session(32)
     names.foreach { name =>
-      runFully(name); clearState() // warm
+      Harness.runFully(spark, name, dir); Harness.clearState(spark) // warm
       val hist = mutable.HashMap[String, Int]().withDefaultValue(0)
       @volatile var sampling = true
       val sampler = new Thread(() => {
@@ -57,11 +41,11 @@ object P47 {
       sampler.setDaemon(true)
       sampler.start()
       val t0 = System.nanoTime()
-      runFully(name)
+      Harness.runFully(spark, name, dir)
       val wall = (System.nanoTime() - t0) / 1e9
       sampling = false
       sampler.join(1000)
-      clearState()
+      Harness.clearState(spark)
       println(f"== $name wall=$wall%.2f s (50ms samples) ==")
       hist.toSeq.sortBy(-_._2).take(30).foreach { case (k, c) =>
         println(f"  $c%4d  $k")

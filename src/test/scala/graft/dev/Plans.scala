@@ -1,10 +1,10 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
+import graft.Harness
 import java.nio.file.{Files, Paths}
 
-/** Dump .explain("formatted") for queries to an output dir (the
-  * plans/r13 deliverable). Usage:
+/** Dump .explain("formatted") for queries to an output dir (the source
+  * of `plans/`). Usage:
   *   Test/runMain graft.dev.Plans <sfDir> <outDir> <suffix> [names...]
   * With no names, dumps every registered query. */
 object Plans {
@@ -16,14 +16,7 @@ object Plans {
       if (args.length > 3) args.drop(3).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
     Files.createDirectories(out)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(32)
     names.foreach { name =>
       try {
         val df = graft.SparkEntry.queries(name)(spark, dir)
@@ -34,8 +27,7 @@ object Plans {
       } catch { case e: Throwable =>
         println(s"[plans] FAIL $name: ${e.getMessage}")
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      Harness.clearState(spark)
     }
     spark.stop()
   }
