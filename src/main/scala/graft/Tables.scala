@@ -183,42 +183,6 @@ object Tables {
   /** A scratch path under [[streamScratchDir]]. */
   def streamScratch(sub: String): String = s"$streamScratchDir/$sub"
 
-  /** [[ensureConf]] plus streaming-scratch conf; call at the top of the
-    * six stream parity builders ONLY. Their checkpoints are
-    * per-invocation scratch (deleted at the top of each builder, never
-    * resumed), so retaining the default 100 batches of offset/commit/
-    * state files only multiplies tiny-file fsyncs per trigger.
-    * Session-scoped like any SQLConf, but flipped only on the builders
-    * that own every checkpoint they touch — a co-hosted durable
-    * streaming query in the same session keeps its recovery window
-    * unless it runs concurrently with a parity build. */
-  def ensureStreamConf(spark: SparkSession): Unit = {
-    ensureConf(spark)
-    spark.conf.set("spark.sql.streaming.minBatchesToRetain", "1")
-    // Spark 4.1 generates + verifies a checksum SIBLING for every
-    // checkpoint file (offset/commit log entries, every state-store
-    // delta), each written on its own spawned thread —
-    // ChecksumCheckpointFileManager showed up directly in the round-13
-    // P42 off-CPU stack samples, and the parity scratch dirs carried
-    // 3 bookkeeping files per delta (Spark's `N.delta.crc` plus
-    // Hadoop ChecksumFileSystem's hidden `.crc` of both). Corruption
-    // detection buys nothing for per-invocation tmpfs checkpoints that
-    // are deleted at the top of every builder and never resumed; a
-    // durable production checkpoint on real storage keeps the default
-    // (this conf is scoped to the parity builders, same as
-    // minBatchesToRetain).
-    spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-    // Round-14 measured NEGATIVE, recorded so it is not retried: a
-    // pure-java.nio CheckpointFileManager (no Hadoop local-FS chmod/ls
-    // process forks, no checksum machinery) A/B'd flat-to-slower over
-    // all six parities (P48 interleaved ABBA ×12 runs/side at sf0.1:
-    // batch 1.81 vs 1.77, scd2 2.36 vs 2.36, wmdedup 1.40 vs 1.41,
-    // ssjoin 1.98 vs 1.87, session 2.30 vs 2.13, window 2.07 vs 1.86 —
-    // nio first). The Shell forks P47 sampled come from the parquet
-    // fixture/output writes' committer path, not the checkpoint
-    // manager; the checkpoint files were already cheap on tmpfs.
-  }
-
   /** Idempotent; call at the top of every query builder so semantics do
     * not depend on who created the session. */
   def ensureConf(spark: SparkSession): Unit = {
@@ -256,7 +220,30 @@ object Tables {
     // With the session pinned to UTC the two flavors are numerically
     // identical, so read both as TIMESTAMP.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    // events' TIMESTAMP(NANOS) as raw longs; see [[loadEvents]]
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     graft.functions.GraftExtensions.register(spark)
+  }
+
+  /** Run `body` with `kv` set on `spark`'s session conf, then put each
+    * key back, or unset it if it had no value. For the pipeline jobs
+    * and dials inside a builder; a registry query declares [[Q.conf]]. */
+  def withConf[A](spark: SparkSession, kv: (String, String)*)(body: => A): A = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** A clone of `spark` with `conf` applied; the caller's session is
+    * untouched. */
+  def cloneWith(spark: SparkSession, conf: Map[String, String]): SparkSession = {
+    val s = org.apache.spark.sql.SessionClone(spark)
+    conf.foreach { case (k, v) => s.conf.set(k, v) }
+    s
   }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
@@ -265,14 +252,12 @@ object Tables {
       spark.read.parquet(s"$sfDir/$name.parquet")
   }
 
-  /** `events.parquet` carries TIMESTAMP(NANOS), which Spark's vectorized
-    * reader rejects outright. Read nanos as raw longs (legacy conf) and
-    * integer-divide to microseconds — the fixture generator emits
-    * µs-granular values, so the narrowing is lossless. `div` (integral
-    * divide) is load-bearing: a double-typed `/` on ~1.7e18 ns loses
-    * precision past 2^53. */
+  /** `events.parquet` carries TIMESTAMP(NANOS), read as raw longs under
+    * [[ensureConf]]'s `nanosAsLong`; integer-divide them to
+    * microseconds — the fixture generator emits µs-granular values, so
+    * the narrowing is lossless. `div` (integral divide) is load-bearing:
+    * a double-typed `/` on ~1.7e18 ns loses precision past 2^53. */
   private def loadEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
     if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
       raw.withColumn("ts", org.apache.spark.sql.functions.expr(
@@ -285,9 +270,80 @@ object Tables {
 }
 
 /** One verifiable operator: a Spark builder + (optionally) equivalent
-  * ANSI SQL the driver runs in DuckDB over the same parquet tables. */
+  * ANSI SQL the driver runs in DuckDB over the same parquet tables.
+  * `conf` is the session conf the query runs under (see
+  * `SparkEntry.queries`). */
 final case class Q(
     name: String,
     build: (SparkSession, String) => DataFrame,
     oracle: Option[String],
-    doc: String)
+    doc: String,
+    conf: Map[String, String] = Map.empty)
+
+object Q {
+  /** Whole-stage fusion off (round 14). The RTA star/scd2/date-parse
+    * family builds VERY wide projections (dozens of chained
+    * regexp/when/date expressions per row). Fusing them into one
+    * whole-stage processNext produces generated methods past HotSpot's
+    * DontCompileHugeMethods limit (HugeMethodLimit = 8000 bytecodes), so
+    * the fused method runs in the BYTECODE INTERPRETER — slower than the
+    * unfused path, whose per-operator projections compile to small,
+    * JIT-friendly methods. The same class of bug as round 13's quantize
+    * kernel (VectorExpressions.Quantize1000), but here the width is
+    * intrinsic to the declared pipeline semantics, so the fix is to stop
+    * fusing rather than to rewrite the expressions.
+    *
+    * Evidence (P45/P46, interleaved same-JVM medians):
+    *  - stage(rawSynth) noop at sf0.1: 2.10 s fused vs 1.38 s unfused
+    *    while the stage is pure CPU (27 s task time / 19.4 s CPU on 32
+    *    tasks) — a per-row effect, not fixed overhead;
+    *  - q_star_fact sf0.1 5.21 -> 4.43, sf1 15.6 -> 11.1 (two fresh JVM
+    *    sessions agree); q_star_dim_vehicle sf1 8.7 -> 6.1;
+    *  - Spark's own escape hatch confirms the mechanism: with
+    *    spark.sql.codegen.hugeMethodLimit=8000 (fall back exactly when
+    *    the JIT would refuse) q_star_fact sf1 reads 12.4 vs 15.6;
+    *  - the scd2/cdc/date-parse family shows the same direction at both
+    *    SFs (q_scd2_merge 1.03 -> 0.81 sf0.1, 1.79 -> 1.41 sf1;
+    *    q_cdc_apply -17%/-9%; q_date_parse_multi -17%/-14%).
+    * Queries that measured NEUTRAL or NEGATIVE unfused at either SF
+    * (q_fact_assembly, q1_pricing_summary, q_misalign_repair,
+    * q_resolution_fuzzy, ...) stay on the default fused path. Scale
+    * note: the method-size pathology is data-independent (bytecode size
+    * does not grow with rows, and the interpretation penalty is
+    * per-row), so the unfused choice holds at any corpus size. */
+  val Unfused: Map[String, String] = Map("spark.sql.codegen.wholeStage" -> "false")
+
+  /** The reference runs both Glue jobs under LEGACY time parsing
+    * (etl1:23, etl2:46): 2-digit years resolve via SimpleDateFormat's
+    * 80/20 pivot, and the dd/MM/yyyy parses of the pipeline depend on
+    * it. */
+  val LegacyTime: Map[String, String] =
+    Map("spark.sql.legacy.timeParserPolicy" -> "LEGACY")
+
+  /** Streaming-scratch conf for the six stream parities. Their
+    * checkpoints are per-invocation scratch (deleted at the top of each
+    * builder, never resumed), so:
+    *  - retaining the default 100 batches of offset/commit/state files
+    *    only multiplies tiny-file fsyncs per trigger;
+    *  - Spark 4.1 generates + verifies a checksum SIBLING for every
+    *    checkpoint file (offset/commit log entries, every state-store
+    *    delta), each written on its own spawned thread —
+    *    ChecksumCheckpointFileManager showed up directly in the round-13
+    *    P42 off-CPU stack samples, and the parity scratch dirs carried 3
+    *    bookkeeping files per delta (Spark's `N.delta.crc` plus Hadoop
+    *    ChecksumFileSystem's hidden `.crc` of both). Corruption detection
+    *    buys nothing for tmpfs checkpoints that are never resumed; a
+    *    durable production checkpoint on real storage keeps the default.
+    * Round-14 measured NEGATIVE, recorded so it is not retried: a
+    * pure-java.nio CheckpointFileManager (no Hadoop local-FS chmod/ls
+    * process forks, no checksum machinery) A/B'd flat-to-slower over
+    * all six parities (P48 interleaved ABBA ×12 runs/side at sf0.1:
+    * batch 1.81 vs 1.77, scd2 2.36 vs 2.36, wmdedup 1.40 vs 1.41,
+    * ssjoin 1.98 vs 1.87, session 2.30 vs 2.13, window 2.07 vs 1.86 —
+    * nio first). The Shell forks P47 sampled come from the parquet
+    * fixture/output writes' committer path, not the checkpoint
+    * manager; the checkpoint files were already cheap on tmpfs. */
+  val StreamScratch: Map[String, String] = Map(
+    "spark.sql.streaming.minBatchesToRetain" -> "1",
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")
+}

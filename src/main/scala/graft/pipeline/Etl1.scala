@@ -125,16 +125,17 @@ object Etl1 {
         col("year").isNotNull && col("month").isNotNull)
   }
 
-  /** CSV in → partitioned stage Parquet out (etl1:59,145). */
+  /** CSV in → partitioned stage Parquet out (etl1:59,145), LEGACY
+    * time parsing inside (etl1:23). */
   def run(spark: SparkSession, inputPath: String, stagePath: String,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
-    spark.conf.set("spark.sql.legacy.timeParserPolicy", "LEGACY")
-    val reader = spark.read.option("header", true)
-    val raw = schema match {
-      case Some(s) => reader.schema(s).csv(inputPath)
-      case None    => reader.option("inferSchema", true).csv(inputPath)
+      schema: Option[org.apache.spark.sql.types.StructType] = None): Unit =
+    graft.Tables.withConf(spark, graft.Q.LegacyTime.toSeq: _*) {
+      val reader = spark.read.option("header", true)
+      val raw = schema match {
+        case Some(s) => reader.schema(s).csv(inputPath)
+        case None    => reader.option("inferSchema", true).csv(inputPath)
+      }
+      stage(raw).write.mode("overwrite")
+        .partitionBy("year", "month").parquet(stagePath)
     }
-    stage(raw).write.mode("overwrite")
-      .partitionBy("year", "month").parquet(stagePath)
-  }
 }

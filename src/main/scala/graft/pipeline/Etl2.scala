@@ -257,23 +257,23 @@ object Etl2 {
   }
 
   /** Stage parquet in → gold parquet out, with the sized fact sink
-    * (etl2:285-331). The keyed plan is cached for the duration —
-    * four sinks share one evaluation. */
-  def run(spark: SparkSession, stagePath: String, outRoot: String): Unit = {
-    spark.conf.set("spark.sql.legacy.timeParserPolicy", "LEGACY")
-    val df = keyed(spark.read.parquet(stagePath)).cache()
-    try {
-      val (dv, dm, dr) = dimensions(df)
-      val dvCached = dv.cache()
-      val res = resolveVehicles(df, dvCached)
-      val f = fact(df, res)
-      SizedWrite.writeSized(f, s"$outRoot/fact_registrations_tmp",
-        s"$outRoot/fact_registrations", Seq("REGISTRATION_YEAR"))
-      dvCached.write.mode("overwrite").parquet(s"$outRoot/dim_vehicle")
-      dm.write.mode("overwrite").parquet(s"$outRoot/dim_manufacturer")
-      dr.write.mode("overwrite").parquet(s"$outRoot/dim_rta")
-    } finally {
-      df.unpersist()
+    * (etl2:285-331), LEGACY time parsing inside (etl2:46). The keyed
+    * plan is cached for the duration — four sinks share one evaluation. */
+  def run(spark: SparkSession, stagePath: String, outRoot: String): Unit =
+    graft.Tables.withConf(spark, graft.Q.LegacyTime.toSeq: _*) {
+      val df = keyed(spark.read.parquet(stagePath)).cache()
+      try {
+        val (dv, dm, dr) = dimensions(df)
+        val dvCached = dv.cache()
+        val res = resolveVehicles(df, dvCached)
+        val f = fact(df, res)
+        SizedWrite.writeSized(f, s"$outRoot/fact_registrations_tmp",
+          s"$outRoot/fact_registrations", Seq("REGISTRATION_YEAR"))
+        dvCached.write.mode("overwrite").parquet(s"$outRoot/dim_vehicle")
+        dm.write.mode("overwrite").parquet(s"$outRoot/dim_manufacturer")
+        dr.write.mode("overwrite").parquet(s"$outRoot/dim_rta")
+      } finally {
+        df.unpersist()
+      }
     }
-  }
 }

@@ -649,7 +649,8 @@ object AnalyticsQueries {
       scd2History(ordersProjected(spark, dir))
     },
     Some(scd2Sql),
-    "SCD2 dimension history: status runs → versioned valid_from/valid_to rows")
+    "SCD2 dimension history: status runs → versioned valid_from/valid_to rows",
+    conf = Q.Unfused)
 
   /** Incremental SCD2 maintenance — the production MERGE shape: a new
     * batch of orders arrives (d ≥ cutoff); only the customers present
@@ -681,7 +682,8 @@ object AnalyticsQueries {
       untouched.unionByName(rebuilt)
     },
     Some(scd2Sql),
-    "Incremental SCD2 merge: rebuild affected customers only == full rebuild")
+    "Incremental SCD2 merge: rebuild affected customers only == full rebuild",
+    conf = Q.Unfused)
 
   /** The strictly-incremental form: advance the history from HISTORY
     * ROWS + BATCH ONLY — q_scd2_merge still re-read affected
@@ -701,7 +703,8 @@ object AnalyticsQueries {
       graft.ops.Scd2.fold(hist, o.filter(col("d") >= lit(cutoff)))
     },
     Some(scd2Sql),
-    "Strictly-incremental SCD2 fold (history+batch only) == full rebuild")
+    "Strictly-incremental SCD2 fold (history+batch only) == full rebuild",
+    conf = Q.Unfused)
 
   /** Z-order (Morton) interleave of two join/filter dimensions — the
     * layout transform behind multi-dimensional data skipping: sorting

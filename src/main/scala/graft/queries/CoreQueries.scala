@@ -93,7 +93,8 @@ object CoreQueries {
              THEN CAST(try_strptime(u, '%Y/%m/%d') AS DATE)
            ELSE NULL END AS parsed
     FROM c"""),
-    "§2.8 multi-format to_date with cleaning regexes")
+    "§2.8 multi-format to_date with cleaning regexes",
+    conf = Q.Unfused)
 
   /** §2.8 date family: 2-digit-year parse under the reference's LEGACY
     * time-parser policy (reference etl1:23,42-47 — `to_date(u,
@@ -106,9 +107,6 @@ object CoreQueries {
     "q_date_parse_yy",
     (spark, dir) => {
       Tables.ensureConf(spark)
-      // same conf the reference ETL sets (etl1:23); parseMulti's yy
-      // branch resolves via SimpleDateFormat's 80/20 pivot under it
-      spark.conf.set("spark.sql.legacy.timeParserPolicy", "LEGACY")
       val o = load(spark, dir, "orders")
       val k = col("o_orderkey")
       val yy = when(k % 2 === 0, k % 31).otherwise(lit(60) + k % 40)
@@ -133,7 +131,8 @@ object CoreQueries {
       make_date(CAST(CASE WHEN yy <= 30 THEN 2000 + yy ELSE 1900 + yy END AS INTEGER),
         month(o_orderdate), CAST(dd AS INTEGER)) AS parsed
     FROM s"""),
-    "§2.8 dd/MM/yy parse: LEGACY 2-digit-year pivot, oracle-pinned")
+    "§2.8 dd/MM/yy parse: LEGACY 2-digit-year pivot, oracle-pinned",
+    conf = Q.Unfused ++ Q.LegacyTime)
 
   /** SHA-256 content-addressed surrogate keys over normalized natural
     * key (reference etl2:156-162). */
@@ -158,7 +157,8 @@ object CoreQueries {
       lower(trim(p_brand)) AS brand_norm,
       p_size
       FROM part"""),
-    "SHA-256 surrogate keys (etl2:156-162)")
+    "SHA-256 surrogate keys (etl2:156-162)",
+    conf = Q.Unfused)
 
   /** P6: column-misalignment repair (reference etl1:76-94), on rows
     * synthesized deterministically from customer. */

@@ -177,7 +177,8 @@ object JoinQueries {
       QUALIFY row_number() OVER (
         PARTITION BY sha256(concat_ws('|', lower(trim(p_brand)), lower(trim(p_type))))
         ORDER BY p_partkey ASC) = 1"""),
-    "A1 deterministic dim build: sha key + first-row-per-key (etl2:156-186)")
+    "A1 deterministic dim build: sha key + first-row-per-key (etl2:156-186)",
+    conf = Q.Unfused)
 
   /** J5 + P4 + §2.8 date keys: fact assembly — chained LEFT joins to
     * dims, int yyyyMMdd date key, validity filter

@@ -100,10 +100,7 @@ object StarQueries {
   }
 
   private def gold(spark: SparkSession, dir: String): Etl2.Gold = {
-    Tables.ensureConf(spark)
-    // the reference runs both Glue jobs under LEGACY time parsing
-    // (etl1:23, etl2:46); dd/MM/yyyy parse behavior depends on it
-    spark.conf.set("spark.sql.legacy.timeParserPolicy", "LEGACY")
+    Tables.ensureConf(spark) // callers declare Q.LegacyTime
     // persist the keyed stage and dim_vehicle, as Etl2.run does: the
     // resolution cascade + fact assembly consume the stage lineage
     // ~6x (dfForMatch, dvLookup, manRes, fact, exact, residue) and
@@ -289,7 +286,8 @@ object StarQueries {
       fuel_clean AS FUEL_TYPE,
       CASE WHEN slno % 13 = 1 THEN modelName || 'Q' ELSE modelName END AS MODEL_NAME
     FROM fin"""),
-    "End-to-end Etl1→Etl2 fact parity (etl1:56-148 + etl2:100-331)")
+    "End-to-end Etl1→Etl2 fact parity (etl1:56-148 + etl2:100-331)",
+    conf = Q.Unfused ++ Q.LegacyTime)
 
   /** dim_vehicle parity: first-row-per-VEHICLE_ID attributes with the
     * deterministic tempRegistrationNumber tiebreak. */
@@ -297,7 +295,6 @@ object StarQueries {
     "q_star_dim_vehicle",
     (spark, dir) => {
       Tables.ensureConf(spark)
-      spark.conf.set("spark.sql.legacy.timeParserPolicy", "LEGACY")
       // dims need only the keyed stage — skip the resolution cascade
       // and fact assembly gold() would also build
       val (dv, _, _) = Etl2.dimensions(Etl2.keyed(Etl1.stage(rawSynth(spark, dir))))
@@ -316,7 +313,8 @@ object StarQueries {
       isElectric AS IS_ELECTRIC
     FROM fin
     QUALIFY row_number() OVER (PARTITION BY VEHICLE_ID ORDER BY reg ASC) = 1"""),
-    "End-to-end Etl2 dim_vehicle parity (etl2:170-186)")
+    "End-to-end Etl2 dim_vehicle parity (etl2:170-186)",
+    conf = Q.Unfused ++ Q.LegacyTime)
 
   val all: Seq[Q] = Seq(qStarFact, qStarDimVehicle)
 }

@@ -19,10 +19,10 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamQueries {
   import Tables.load
 
-  /** Run `body` with `spark.sql.shuffle.partitions` = n, restoring the
-    * session value after. For a STREAMING query this is the state-store
-    * partition count, fixed at the checkpoint's first run — the state
-    * sizing dial: every micro-batch pays per-partition state-store
+  /** `spark.sql.shuffle.partitions` = n, for [[Tables.withConf]]
+    * around a STREAMING query, where it is the state-store partition
+    * count, fixed at the checkpoint's first run — the state sizing
+    * dial: every micro-batch pays per-partition state-store
     * open/commit/snapshot cost, so partitions must track KEY
     * CARDINALITY (state volume / target per-task state), not the
     * batch-side core count. At bench scale 32 state partitions for a
@@ -30,13 +30,8 @@ object StreamQueries {
     * stream_join 7.5 s → measured ~3× faster at 8); at corpus scale
     * the same dial turns the other way. Results are partitioning-
     * independent (hash-verified), only the constant factor moves. */
-  private def withStatePartitions[A](
-      spark: org.apache.spark.sql.SparkSession, n: Int)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
-  }
+  private def statePartitions(n: Int): (String, String) =
+    "spark.sql.shuffle.partitions" -> n.toString
 
   /** Scratch root. LOCAL-MODE-ONLY path, same note as q_csv_scan:
     * single-JVM environment makes driver-local /tmp visible to all
@@ -46,7 +41,7 @@ object StreamQueries {
   val qStreamBatchParity = Q(
     "q_stream_batch_parity",
     (spark, dir) => {
-      Tables.ensureStreamConf(spark)
+      Tables.ensureConf(spark)
       val inDir = s"$parityRoot/in"
       val outDir = s"$parityRoot/out"
       val ckDir = s"$parityRoot/ck"
@@ -110,7 +105,8 @@ object StreamQueries {
     SELECT n.doc_id, n.fp, h.canonical
     FROM (SELECT doc_id, fp FROM f WHERE doc_id % 3 != 0) n
     JOIN hist h USING (fp)"""),
-    "Streaming foreachBatch incremental dedup == batch result (parity oracle)")
+    "Streaming foreachBatch incremental dedup == batch result (parity oracle)",
+    conf = Q.StreamScratch)
 
   /** Streaming SCD2 maintenance — the dimension-update pipeline as it
     * actually runs in production: a seed history is built once, then
@@ -133,7 +129,7 @@ object StreamQueries {
   val qStreamScd2Parity = Q(
     "q_stream_scd2_parity",
     (spark, dir) => {
-      Tables.ensureStreamConf(spark)
+      Tables.ensureConf(spark)
       val inDir = s"$scd2Root/in"
       val ckDir = s"$scd2Root/ck"
       val fs = new Path(scd2Root)
@@ -177,7 +173,8 @@ object StreamQueries {
       hist
     },
     Some(AnalyticsQueries.scd2Sql),
-    "Streaming SCD2: chained incremental folds == full rebuild (parity oracle)")
+    "Streaming SCD2: chained incremental folds == full rebuild (parity oracle)",
+    conf = Q.StreamScratch ++ Q.Unfused)
 
   /** Streaming dedup with WATERMARKED state —
     * `dropDuplicatesWithinWatermark`, the built-in Structured
@@ -202,7 +199,7 @@ object StreamQueries {
   val qStreamWatermarkDedup = Q(
     "q_stream_watermark_dedup",
     (spark, dir) => {
-      Tables.ensureStreamConf(spark)
+      Tables.ensureConf(spark)
       val inDir = s"$wmRoot/in"
       val outDir = s"$wmRoot/out"
       val ckDir = s"$wmRoot/ck"
@@ -224,7 +221,7 @@ object StreamQueries {
       // 4, not 8 (round-11 P28 re-sweep after the tmpfs scratch move —
       // cheap fsyncs moved the curve: p4 1.58 / p8 1.69 s five-pass
       // interleaved medians; results partitioning-independent)
-      withStatePartitions(spark, 4) {
+      Tables.withConf(spark, statePartitions(4)) {
         val stream = spark.readStream
           .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, cents LONG")
           .option("maxFilesPerTrigger", "1")
@@ -251,7 +248,8 @@ object StreamQueries {
       user_id, event_type,
       CAST(round(value*100) AS BIGINT) AS cents
       FROM events"""),
-    "Streaming watermarked dedup: re-delivered events collapse to the batch set")
+    "Streaming watermarked dedup: re-delivered events collapse to the batch set",
+    conf = Q.StreamScratch)
 
   /** Watermarked STREAM-STREAM inner join — the remaining Structured
     * Streaming state shape (two-sided buffered state, expired by the
@@ -271,7 +269,7 @@ object StreamQueries {
   val qStreamStreamJoin = Q(
     "q_stream_stream_join",
     (spark, dir) => {
-      Tables.ensureStreamConf(spark)
+      Tables.ensureConf(spark)
       val fs = new Path(ssjRoot)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(new Path(ssjRoot), true)
@@ -296,7 +294,7 @@ object StreamQueries {
       // results partitioning-independent, hash-verified; round-11 P28
       // post-tmpfs re-sweep confirms: p1/p2/p4 flat at ~2.98,
       // p8 3.37 s — 4 stays)
-      withStatePartitions(spark, 4) {
+      Tables.withConf(spark, statePartitions(4)) {
         val clicks = spark.readStream
           .schema("c_id LONG, c_ts TIMESTAMP, c_user LONG")
           .option("maxFilesPerTrigger", "1").parquet(s"$ssjRoot/clicks")
@@ -327,7 +325,8 @@ object StreamQueries {
         ON c.user_id = p.user_id
        AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR
       WHERE c.event_type = 'click' AND p.event_type = 'purchase'"""),
-    "Watermarked stream-stream join == the batch time-bounded join (parity oracle)")
+    "Watermarked stream-stream join == the batch time-bounded join (parity oracle)",
+    conf = Q.StreamScratch)
 
   /** Stateful streaming SESSIONIZATION parity — the remaining
     * Structured Streaming state shape after the foreachBatch /
@@ -409,7 +408,7 @@ object StreamQueries {
   val qStreamSessionParity = Q(
     "q_stream_session_parity",
     (spark, dir) => {
-      Tables.ensureStreamConf(spark)
+      Tables.ensureConf(spark)
       import spark.implicits._
       val inDir = s"$sessRoot/in"
       val outDir = s"$sessRoot/out"
@@ -434,7 +433,7 @@ object StreamQueries {
 
       // 4, not 8 (round-11 P28 post-tmpfs re-sweep: p4 2.45 / p8 2.53 s
       // five-pass interleaved medians — small but consistent)
-      withStatePartitions(spark, 4) {
+      Tables.withConf(spark, statePartitions(4)) {
         val stream = spark.readStream
           .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE")
           .option("maxFilesPerTrigger", "1")
@@ -471,7 +470,8 @@ object StreamQueries {
       FROM g)
     SELECT user_id, min(ts) AS session_start, COUNT(*) AS n_events
     FROM s GROUP BY user_id, session_seq"""),
-    "Stateful streaming sessionization == batch window sessionizer (parity oracle)")
+    "Stateful streaming sessionization == batch window sessionizer (parity oracle)",
+    conf = Q.StreamScratch)
 
   /** Watermarked WINDOW-AGGREGATE parity — the first streaming shape
     * anyone writes (tumbling-window counts in Append mode) proven
@@ -494,7 +494,7 @@ object StreamQueries {
   val qStreamWindowParity = Q(
     "q_stream_window_parity",
     (spark, dir) => {
-      Tables.ensureStreamConf(spark)
+      Tables.ensureConf(spark)
       import spark.implicits._
       val inDir = s"$winRoot/in"
       val outDir = s"$winRoot/out"
@@ -528,8 +528,8 @@ object StreamQueries {
       // p8 2.68 s five-pass interleaved medians, p2 best in the 3-pass
       // sweep too). The per-key state here is a tiny running count, so
       // fewer stores win until key VOLUME (windows × types) outgrows a
-      // task — the cardinality note on withStatePartitions.
-      withStatePartitions(spark, 2) {
+      // task — the cardinality note on statePartitions.
+      Tables.withConf(spark, statePartitions(2)) {
         val stream = spark.readStream
           .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE")
           .option("maxFilesPerTrigger", "1")
@@ -552,7 +552,8 @@ object StreamQueries {
       event_type, COUNT(*) AS n_events,
       CAST(SUM(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS value_cents
       FROM events GROUP BY 1, 2"""),
-    "Watermarked streaming window aggregate == the batch window plan (parity oracle)")
+    "Watermarked streaming window aggregate == the batch window plan (parity oracle)",
+    conf = Q.StreamScratch)
 
   val all: Seq[Q] = Seq(qStreamBatchParity, qStreamScd2Parity,
     qStreamWatermarkDedup, qStreamStreamJoin, qStreamSessionParity,

@@ -584,7 +584,8 @@ object TextQueries {
     SELECT doc_a, doc_b, sim_a, sim_b,
       CAST(bit_count(xor(sim_a, sim_b)) AS INTEGER) AS hamming
     FROM cand WHERE bit_count(xor(sim_a, sim_b)) <= 3"""),
-    "Near-dedup: 60-bit SimHash + 4×15-bit band blocking + Hamming ≤ 3")
+    "Near-dedup: 60-bit SimHash + 4×15-bit band blocking + Hamming ≤ 3",
+    conf = Q.Unfused)
 
   /** MinHash signatures via the typed Aggregator (mergeable-sketch
     * path): token hashes explode, the UDAF folds them with map-side
@@ -924,7 +925,8 @@ object TextQueries {
     SELECT doc_id, n_hits, n_sh,
       CAST(round(10000.0 * n_hits / n_sh) AS BIGINT) AS contam_bp
     FROM hits JOIN nn USING (doc_id)"""),
-    "Decontamination: broadcast benchmark shingles, per-doc overlap evidence")
+    "Decontamination: broadcast benchmark shingles, per-doc overlap evidence",
+    conf = Q.Unfused)
 
   /** Within-document repetition signals (the Gopher-style quality
     * gate): duplicate-word fraction and top-word share, both in basis
@@ -1178,10 +1180,8 @@ object TextQueries {
       val newDocs = f.filter(col("doc_id") % 3 =!= 0)
       val nHist = hist.count() // materializes the persist; reused below
       val cap = math.max(64L, graft.ops.BloomOps.optimalBits(nHist) / 8)
-      val confKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-      val prev = spark.conf.getOption(confKey)
-      spark.conf.set(confKey, cap.toString)
-      try {
+      Tables.withConf(spark,
+          "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" -> cap.toString) {
         require(graft.ops.BloomOps.numShards(nHist,
           graft.ops.BloomOps.TargetFpp, cap) >= 2,
           "sharded path did not engage — cap derivation broken")
@@ -1189,11 +1189,6 @@ object TextQueries {
         // lowered cap is observed now and restored safely after
         graft.ops.BloomOps.prefilteredJoin(hist, newDocs, "fp")
           .select(col("doc_id"), col("fp"), col("canonical"))
-      } finally {
-        prev match {
-          case Some(v) => spark.conf.set(confKey, v)
-          case None => spark.conf.unset(confKey)
-        }
       }
     },
     Some("""WITH f AS (

@@ -389,7 +389,8 @@ object WarehouseQueries {
       SELECT o_orderkey + 2000000000, o_custkey, o_orderstatus,
         o_orderpriority, price_cents, o_day
       FROM old WHERE o_orderkey % 107 = 0"""),
-    "CDC apply: old snapshot + change feed reconstructs the new snapshot")
+    "CDC apply: old snapshot + change feed reconstructs the new snapshot",
+    conf = Q.Unfused)
 
   val all: Seq[Q] = Seq(qHllRollup, qIncrAgg, qDqAudit, qSchemaEvolution,
     qSnapshotDiff, qCdcApply)

@@ -27,14 +27,20 @@ class RtaPipelineSpec extends SparkSpec {
     "7,TR006,junk,junk,OFFICE3,KIA,SELTOS HTK,PETROL,2021,GREY,LMV,5"
   )
 
-  private lazy val dirs = {
+  private val policy = "spark.sql.legacy.timeParserPolicy"
+
+  /** Output root, and the caller's timeParserPolicy after the two jobs
+    * (preset to CORRECTED for them; the suite session runs LEGACY). */
+  private lazy val (dirs, policyAfterRuns) = {
     val root = java.nio.file.Files.createTempDirectory("graft-e2e").toString
     val csv = s"$root/raw.csv"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(csv),
       (header +: rows).mkString("\n"))
-    Etl1.run(spark, csv, s"$root/stage")
-    Etl2.run(spark, s"$root/stage", s"$root/gold")
-    root
+    Tables.withConf(spark, policy -> "CORRECTED") {
+      Etl1.run(spark, csv, s"$root/stage")
+      Etl2.run(spark, s"$root/stage", s"$root/gold")
+      (root, spark.conf.get(policy))
+    }
   }
 
   private lazy val stage = spark.read.parquet(s"$dirs/stage")
@@ -47,6 +53,8 @@ class RtaPipelineSpec extends SparkSpec {
     val tr1 = stage.filter($"tempRegistrationNumber" === "TR001").collect()
     assert(tr1.length == 1)
     assert(tr1.head.getAs[Int]("slno") == 2)
+    assert(policyAfterRuns == "CORRECTED",
+      "Etl1.run/Etl2.run must leave the caller's timeParserPolicy as they found it")
   }
 
   test("stage: validity gate drops repaired-misaligned and junk dates") {
