@@ -12,18 +12,13 @@ object Norm {
     * (reference etl2:200-202,221-226). */
   def lowerTrim(c: Column): Column = lower(trim(c))
 
-  /** Strip trailing punctuation off a maker/brand name
-    * (reference etl1:66). */
-  def cleanMaker(c: Column): Column =
-    regexp_replace(trim(c), "[\\.,]+$", "")
-
   /** Keep only model-safe characters (reference etl1:100). */
   def cleanModelDesc(c: Column): Column =
     regexp_replace(c, "[^A-Za-z0-9\\s\\+\\-\\(\\)\\./]", "")
 
-  /** NULL/blank → sentinel, else normalized (reference etl2:156). */
-  def orUnknown(c: Column, sentinel: String = "UNKNOWN"): Column =
-    coalesce(nullif(trim(c), lit("")), lit(sentinel))
+  /** NULL/blank → "UNKNOWN", else trimmed (reference etl2:156). */
+  def orUnknown(c: Column): Column =
+    coalesce(nullif(trim(c), lit("")), lit("UNKNOWN"))
 }
 
 /** Multi-format defensive date parsing
@@ -36,8 +31,19 @@ object DateParse {
     regexp_replace(regexp_replace(c, "[^\\d/.\\-]", ""), "[\\.\\-]", "/")
 
   /** Shape-dispatched to_date over dd/MM/yyyy | yyyy/MM/dd | dd/MM/yy
-    * (reference etl1:40-49). 2-digit years resolve per the session's
-    * time parser policy. */
+    * (reference etl1:40-49), else null. 2-digit years resolve per the
+    * session's time parser policy. The three anchored shapes cannot
+    * overlap, so branch order does not matter; the strip leaves no
+    * whitespace, so padded input needs no trim.
+    *
+    * Round-11 negative probe (P31, sf1, interleaved): replacing the
+    * guarded to_date branches with substring→cast→make_date integer
+    * arithmetic — semantics-identical for valid post-1582 dates —
+    * measured ~2× SLOWER in `Etl1.stage` (11.2 vs 6.3 s stage wall),
+    * with or without hand-CSE'd cleaned columns; the extra expressions
+    * push the already-wide stage projection out of whole-stage codegen.
+    * This LEGACY to_date chain is ~160 ns/row post-regex and is the
+    * measured floor — don't "optimize" it again without an A/B. */
   def parseMulti(c: Column): Column = {
     val u = cleanDateStr(c)
     when(u.rlike("^\\d{2}/\\d{2}/\\d{4}$"), to_date(u, "dd/MM/yyyy"))
@@ -58,7 +64,12 @@ object Repair {
   val OfficePattern = "(?i)^(RTA|UNIT OFFICE|MVI|DTO|ZONAL|TRANSPORT).*"
   val StateCodePattern = "(?i)^(TS|TG)$"
 
-  /** Returns (repairedOffice, repairedFromdate). */
+  /** Steps 1–3 of the reference repair (etl1:76-94): move an office
+    * name out of `fromdate` into a null `OfficeCd`, null that
+    * `fromdate`, null a bare state code. Returns (repairedOffice,
+    * repairedFromdate). One when-chain gives the reference's sequential
+    * result: a moved value matches `OfficePattern`, so it is never a
+    * state code. The step-4 backfill is `Etl1.stage`'s. */
   def officeCdRepair(officeCd: Column, fromdate: Column): (Column, Column) = {
     val officeLike = fromdate.rlike(OfficePattern)
     val office = when(officeLike && officeCd.isNull, fromdate)
@@ -66,39 +77,6 @@ object Repair {
       .otherwise(officeCd)
     val fd = when(officeLike, lit(null).cast("string")).otherwise(fromdate)
     (office, fd)
-  }
-}
-
-/** Regex classifiers (reference etl1:101-130, etl2:112-135). */
-object Classify {
-  /** Fuel-class style when-chain over free text
-    * (reference etl1:120-124). */
-  def fuelClass(c: Column): Column = {
-    val u = upper(coalesce(c, lit("")))
-    when(u.rlike("BATTERY|ELECTRIC"), lit("ELECTRIC"))
-      .when(u.rlike("PETROL|GASOLINE"), lit("PETROL"))
-      .when(u.rlike("DIESEL"), lit("DIESEL"))
-      .when(u.rlike("CNG"), lit("CNG"))
-      .when(u.rlike("LPG"), lit("LPG"))
-      .otherwise(lit("OTHERS"))
-  }
-
-  /** Emission standard extraction, group 1 (reference etl2:125,132). */
-  def emissionStd(c: Column): Column = {
-    val e = regexp_extract(upper(coalesce(c, lit(""))),
-      "(BS\\s?III[AB]?|BS\\s?IV|BS\\s?V|BS\\s?VI)", 1)
-    when(e === "", lit("UNKNOWN")).otherwise(regexp_replace(e, "\\s", ""))
-  }
-
-  /** makeYear repair: 2-digit → 20xx, 4-digit kept, year-in-text
-    * extracted, else UNKNOWN (reference etl1:127-130, etl2:112-117). */
-  def yearFix(c: Column): Column = {
-    val t = trim(coalesce(c, lit("")))
-    val inText = regexp_extract(t, "(19\\d{2}|20[0-2]\\d)", 0)
-    when(t.rlike("^[0-9]{2}$"), concat(lit("20"), t))
-      .when(t.rlike("^[0-9]{4}$"), t)
-      .when(inText =!= "", inText)
-      .otherwise(lit("UNKNOWN"))
   }
 }
 

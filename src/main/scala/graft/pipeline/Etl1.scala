@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.ops.{DateParse, Repair}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -7,7 +8,11 @@ import org.apache.spark.sql.functions._
 /** Raw registration CSV → cleaned, deduplicated, partitioned stage.
   * Semantics from the reference's first Glue job
   * (etl1_clean_and_stage.py:56-148), expressed as a pure
-  * DataFrame => DataFrame so it unit-tests without I/O.
+  * DataFrame => DataFrame so it unit-tests without I/O. The date parse
+  * is `ops.DateParse.parseMulti` and steps 1-3 of the office repair are
+  * `ops.Repair.officeCdRepair`, the same functions the
+  * `q_date_parse_multi`, `q_date_parse_yy` and `q_misalign_repair`
+  * oracle queries check.
   *
   * Deliberate divergences (documented, all strict improvements):
   *  - the dedup window gets deterministic tiebreaks (todate, slno)
@@ -19,31 +24,8 @@ import org.apache.spark.sql.functions._
   *    execute the lineage twice for logging).
   */
 object Etl1 {
-  val OfficePattern = "(?i)^(RTA|UNIT OFFICE|MVI|DTO|ZONAL|TRANSPORT).*"
-  val StateCodePattern = "(?i)^(TS|TG)$"
   val TrailerPattern = "trailer|trailor|tipper|tractor|tanker"
   val ElectricPattern = "\\b(ev|bov|electric|hybrid)\\b"
-
-  /** Multi-format date parse (etl1:32-53): strip junk, unify
-    * separators, dispatch on shape, else null.
-    *
-    * Round-11 negative probe (P31, sf1, interleaved): replacing the
-    * guarded to_date branches with substring→cast→make_date integer
-    * arithmetic — semantics-identical for valid post-1582 dates —
-    * measured ~2× SLOWER (11.2 vs 6.3 s stage wall), with or without
-    * hand-CSE'd `cleaned` columns; the extra expressions push the
-    * already-wide stage projection out of whole-stage codegen. The
-    * LEGACY to_date chain here is ~160 ns/row post-regex and is the
-    * measured floor — don't "optimize" it again without an A/B. */
-  private def parseDate(c: org.apache.spark.sql.Column) = {
-    val cleaned = regexp_replace(
-      trim(regexp_replace(c.cast("string"), "[^\\d/.\\-]", "")),
-      "[\\.\\-]", "/")
-    when(cleaned.rlike("^\\d{2}/\\d{2}/\\d{4}$"), to_date(cleaned, "dd/MM/yyyy"))
-      .when(cleaned.rlike("^\\d{2}/\\d{2}/\\d{2}$"), to_date(cleaned, "dd/MM/yy"))
-      .when(cleaned.rlike("^\\d{4}/\\d{2}/\\d{2}$"), to_date(cleaned, "yyyy/MM/dd"))
-      .otherwise(lit(null).cast("date"))
-  }
 
   /** Raw rows → stage rows. Input needs the raw RTA columns
     * (tempRegistrationNumber, fromdate, todate, OfficeCd, makerName,
@@ -61,18 +43,11 @@ object Etl1 {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
 
-    // OfficeCd misalignment repair, three sequential steps (etl1:76-94)
-    val officeLike = col("fromdate").cast("string").rlike(OfficePattern)
+    // OfficeCd misalignment repair (etl1:76-94): steps 1-3 from
+    // Repair, then the step-4 backfill from the repaired fromdate
+    val (office, fromdate) = Repair.officeCdRepair(col("OfficeCd"), col("fromdate"))
     val repaired = deduped
-      .withColumn("OfficeCd",
-        when(officeLike && col("OfficeCd").isNull, col("fromdate"))
-          .otherwise(col("OfficeCd")))
-      .withColumn("fromdate",
-        when(col("fromdate").cast("string").rlike(OfficePattern),
-          lit(null).cast("string")).otherwise(col("fromdate")))
-      .withColumn("OfficeCd",
-        when(col("OfficeCd").rlike(StateCodePattern), lit(null))
-          .otherwise(col("OfficeCd")))
+      .withColumns(Map("OfficeCd" -> office, "fromdate" -> fromdate))
       .withColumn("OfficeCd",
         when(col("OfficeCd").isNull && col("fromdate").isNotNull, col("fromdate"))
           .otherwise(col("OfficeCd")))
@@ -98,8 +73,8 @@ object Etl1 {
 
     // dates (etl1:32-53,114), fuel + makeYear (etl1:120-130)
     val typed = modeled
-      .withColumn("fromdate_parsed", parseDate(col("fromdate")))
-      .withColumn("todate_parsed", parseDate(col("todate")))
+      .withColumn("fromdate_parsed", DateParse.parseMulti(col("fromdate")))
+      .withColumn("todate_parsed", DateParse.parseMulti(col("todate")))
       .withColumn("fuel_clean",
         upper(when(col("fuel").rlike("BATTERY|ELECTRIC"), lit("ELECTRIC"))
           .when(col("fuel").rlike("PETROL|GASOLINE"), lit("PETROL"))

@@ -65,32 +65,33 @@ object JoinQueries {
     "LEFT SEMI join (completeness; anti-join dual)")
 
   /** J1–J4 + W2 + U1: the full entity-resolution cascade — exact match,
-    * anti-join residue, blocked Levenshtein fuzzy match with a
-    * deterministic best-candidate window, union — over a catalog built
-    * from `part` and observations synthesized by deterministic
-    * corruption so DuckDB reproduces them (reference etl2:195-250). */
+    * residue, blocked Levenshtein fuzzy match with a deterministic
+    * best-candidate window, union — over a catalog built from `part`
+    * and observations synthesized by deterministic corruption so DuckDB
+    * reproduces them (reference etl2:195-250). Runs
+    * `Resolution.resolve`, the code `Etl2.resolveVehicles` runs, with
+    * one exact key (the name) and one block key (its 2-char prefix);
+    * the oracle keeps the reference's anti-join form. */
   val qResolutionFuzzy = Q(
     "q_resolution_fuzzy",
     (spark, dir) => {
       Tables.ensureConf(spark)
       val p = load(spark, dir, "part")
       val k = col("p_partkey")
-      // both sides feed 3-4 joins in the cascade below; persist so the
-      // distinct shuffle (dv) and the corruption projection (obs) run
-      // once instead of per consumer
       val dv = p.select(lower(trim(col("p_name"))).as("model_norm"))
         .distinct()
-        .select(sha2(col("model_norm"), 256).as("model_id"), col("model_norm"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(sha2(col("model_norm"), 256).as("model_id"), col("model_norm"),
+          Resolution.prefixBlock(col("model_norm")).as("block"))
       val corrupted = when(k % 5 === 0, concat(upper(col("p_name")), lit(" ")))
         .when(k % 5 === 1,
           substring(col("p_name"), lit(1), greatest(length(col("p_name")) - 2, lit(0))))
         .when(k % 5 === 2, concat(col("p_name"), lit(" zz")))
         .when(k % 5 === 3, reverse(col("p_name")))
         .otherwise(col("p_name"))
-      val obs = p.select(k.as("obs_id"), lower(trim(corrupted)).as("obs_norm"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val res = Resolution.resolve(obs, "obs_id", "obs_norm", dv, "model_id", "model_norm")
+      val obs = p.select(k.as("obs_id"), lower(trim(corrupted)).as("model_norm"))
+        .withColumn("block", Resolution.prefixBlock(col("model_norm")))
+      val res = Resolution.resolve(obs, "obs_id", dv, "model_id",
+        exactKeys = Seq("model_norm"), fuzzyKey = "model_norm", blockKeys = Seq("block"))
       obs.join(res, Seq("obs_id"), "left")
         .select("obs_id", "model_id", "lev_dist", "is_fuzzy")
     },

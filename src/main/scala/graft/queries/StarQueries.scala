@@ -5,8 +5,8 @@ import graft.pipeline.{Etl1, Etl2}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** End-to-end star-schema parity: the full Etl1.stage → Etl2.gold
-  * pipeline (reference etl1_clean_and_stage.py:56-148 +
+/** End-to-end star-schema parity: the full Etl1.stage → Etl2
+  * (keyed, dimensions, resolveVehicles, fact) pipeline (reference etl1_clean_and_stage.py:56-148 +
   * etl2_advclean_and_dimcreatin.py:100-331) run over a raw
   * registration table synthesized deterministically from `orders`, so
   * a DuckDB oracle can mirror the whole cascade: newest-wins dedup on
@@ -99,20 +99,20 @@ object StarQueries {
     main.unionByName(dups)
   }
 
-  private def gold(spark: SparkSession, dir: String): Etl2.Gold = {
+  private def fact(spark: SparkSession, dir: String): DataFrame = {
     Tables.ensureConf(spark) // callers declare Q.LegacyTime
     // persist the keyed stage and dim_vehicle, as Etl2.run does: the
-    // resolution cascade + fact assembly consume the stage lineage
-    // ~6x (dfForMatch, dvLookup, manRes, fact, exact, residue) and
-    // re-deriving Etl1.stage's window + repairs per consumer measured
-    // 13 s vs ~3 s cached at sf0.1. (Round-11 note: a localCheckpoint
+    // dimensions, resolution and fact assembly consume the stage
+    // lineage ~6x (three dims, the resolution's observation window,
+    // manRes, fact) and re-deriving Etl1.stage's window + repairs per
+    // consumer measured 13 s vs ~3 s cached at sf0.1. (Round-11 note: a localCheckpoint
     // swap measured FASTER to materialize — P31, 5.9 vs 8 s at sf1 —
     // but slower end-to-end: six consumers re-read this frame, and
     // InMemoryRelation's pruned columnar reads beat row
     // deserialization across that many scans.)
     val df = Etl2.keyed(Etl1.stage(rawSynth(spark, dir)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (dv, dm, dr) = Etl2.dimensions(df)
+    val (dv, _, _) = Etl2.dimensions(df)
     val dvC = dv.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Observation corruption AFTER the dim build (dims stay clean):
     // a suffix typo keeps the 2-char block key and stays at
@@ -131,7 +131,7 @@ object StarQueries {
       when(col("slno") % 13 === 1, concat(col("modelName"), lit("Q")))
         .otherwise(col("modelName")))
     val res = Etl2.resolveVehicles(dfObs, dvC)
-    Etl2.Gold(dvC, dm, dr, Etl2.fact(dfObs, res))
+    Etl2.fact(dfObs, res)
   }
 
   /** The raw→stage→keyed mirror as DuckDB CTEs (shared by both
@@ -270,7 +270,7 @@ object StarQueries {
     * int date ids, and the (exact-resolved) vehicle id. */
   val qStarFact = Q(
     "q_star_fact",
-    (spark, dir) => gold(spark, dir).fact,
+    (spark, dir) => fact(spark, dir),
     Some("WITH " + sqlStageCtes + """
     SELECT VEHICLE_ID, MANUFACTURER_ID, RTA_ID,
       CAST(strftime(fromdate_parsed, '%Y%m%d') AS INTEGER) AS REGISTRATION_ISSUE_DATE_ID,
@@ -296,7 +296,7 @@ object StarQueries {
     (spark, dir) => {
       Tables.ensureConf(spark)
       // dims need only the keyed stage — skip the resolution cascade
-      // and fact assembly gold() would also build
+      // and fact assembly fact() would also build
       val (dv, _, _) = Etl2.dimensions(Etl2.keyed(Etl1.stage(rawSynth(spark, dir))))
       dv
     },

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.ops.TextOps._
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,6 +17,40 @@ object TextQueries {
   import Tables.load
 
   private val Stop = Seq("the", "a", "and", "of", "is", "to")
+
+  private def punctCount(text: Column): Column =
+    length(regexp_replace(lower(text), "[a-z0-9\\s]", ""))
+
+  /** Quality score over `text` and its words `w`: length, punctuation
+    * and stopword components, weighted 0.4/0.3/0.3, in basis points. */
+  private def qualityBp(text: Column, w: Column): Column = {
+    val nW = size(w)
+    val nC = length(text)
+    val lenScore = least(nW.cast("double") / 200.0, lit(1.0))
+    val punctScore =
+      lit(1.0) - least(punctCount(text).cast("double") / greatest(nC, lit(1)), lit(1.0))
+    val stopScore =
+      least(vocabHits(w, Stop).cast("double") * 10.0 / greatest(nW, lit(1)), lit(1.0))
+    round((lenScore * 0.4 + punctScore * 0.3 + stopScore * 0.3) * 10000).cast("long")
+  }
+
+  /** Language profiles, alphabetical: stopword hits per language, and
+    * the non-ASCII char count for zh. */
+  private def langScores(text: Column, w: Column): Seq[(String, Column)] = Seq(
+    "de" -> vocabHits(w, Seq("der", "die", "das", "und", "ist", "nicht")),
+    "en" -> vocabHits(w, Stop),
+    "es" -> vocabHits(w, Seq("el", "la", "los", "y", "es", "de")),
+    "fr" -> vocabHits(w, Seq("le", "la", "les", "et", "est", "de")),
+    "zh" -> nonAsciiCount(text))
+
+  /** Argmax language of `langScores`; a tie goes to the first. */
+  private def predLang(scores: Seq[(String, Column)]): Column = {
+    val m = greatest(scores.map(_._2): _*)
+    val (first, s0) = scores.head
+    scores.tail.init
+      .foldLeft(when(s0 === m, first)) { case (c, (l, s)) => c.when(s === m, l) }
+      .otherwise(scores.last._1)
+  }
 
   /** Token statistics: chars, whitespace tokens, BPE-ish tokens,
     * distinct words. */
@@ -49,18 +84,10 @@ object TextQueries {
       // repartition: same single-scan-split spread as q_dedup_ngram_jaccard
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
       val w = words(col("text"))
-      val nW = size(w)
-      val nC = length(col("text"))
-      val punct = length(regexp_replace(lower(col("text")), "[a-z0-9\\s]", ""))
-      val stops = vocabHits(w, Stop)
-      val lenScore = least(nW.cast("double") / 200.0, lit(1.0))
-      val punctScore = lit(1.0) - least(punct.cast("double") / greatest(nC, lit(1)), lit(1.0))
-      val stopScore = least(stops.cast("double") * 10.0 / greatest(nW, lit(1)), lit(1.0))
       d.select(col("doc_id"),
-        nC.as("n_chars"), nW.as("n_words"),
-        punct.as("n_punct"), stops.as("n_stopwords"),
-        round((lenScore * 0.4 + punctScore * 0.3 + stopScore * 0.3) * 10000)
-          .cast("long").as("quality_bp"))
+        length(col("text")).as("n_chars"), size(w).as("n_words"),
+        punctCount(col("text")).as("n_punct"), vocabHits(w, Stop).as("n_stopwords"),
+        qualityBp(col("text"), w).as("quality_bp"))
     },
     Some("""WITH s AS (
       SELECT doc_id, length(text) AS n_chars,
@@ -84,18 +111,10 @@ object TextQueries {
       Tables.ensureConf(spark)
       // repartition: same single-scan-split spread as q_dedup_ngram_jaccard
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
-      val w = words(col("text"))
-      val sDe = vocabHits(w, Seq("der", "die", "das", "und", "ist", "nicht"))
-      val sEn = vocabHits(w, Seq("the", "a", "and", "of", "is", "to"))
-      val sEs = vocabHits(w, Seq("el", "la", "los", "y", "es", "de"))
-      val sFr = vocabHits(w, Seq("le", "la", "les", "et", "est", "de"))
-      val sZh = nonAsciiCount(col("text"))
-      val m = greatest(sDe, sEn, sEs, sFr, sZh)
-      d.select(col("doc_id"), col("lang"),
-        sDe.as("s_de"), sEn.as("s_en"), sEs.as("s_es"), sFr.as("s_fr"),
-        sZh.as("s_zh"),
-        when(sDe === m, "de").when(sEn === m, "en").when(sEs === m, "es")
-          .when(sFr === m, "fr").otherwise("zh").as("pred_lang"))
+      val scores = langScores(col("text"), words(col("text")))
+      d.select(Seq(col("doc_id"), col("lang")) ++
+        scores.map { case (l, s) => s.as(s"s_$l") } :+
+        predLang(scores).as("pred_lang"): _*)
     },
     Some("""WITH s AS (
       SELECT doc_id, lang,
@@ -635,24 +654,9 @@ object TextQueries {
       // repartition: same single-scan-split spread as q_dedup_ngram_jaccard
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
       val w = words(col("text"))
-      val nW = size(w)
-      val nC = length(col("text"))
-      val punct = length(regexp_replace(lower(col("text")), "[a-z0-9\\s]", ""))
-      val stops = vocabHits(w, Stop)
-      val lenScore = least(nW.cast("double") / 200.0, lit(1.0))
-      val punctScore = lit(1.0) - least(punct.cast("double") / greatest(nC, lit(1)), lit(1.0))
-      val stopScore = least(stops.cast("double") * 10.0 / greatest(nW, lit(1)), lit(1.0))
-      val sDe = vocabHits(w, Seq("der", "die", "das", "und", "ist", "nicht"))
-      val sEn = vocabHits(w, Seq("the", "a", "and", "of", "is", "to"))
-      val sEs = vocabHits(w, Seq("el", "la", "los", "y", "es", "de"))
-      val sFr = vocabHits(w, Seq("le", "la", "les", "et", "est", "de"))
-      val sZh = nonAsciiCount(col("text"))
-      val m = greatest(sDe, sEn, sEs, sFr, sZh)
-      val scored = d.select(col("doc_id"), nW.as("n_tokens"),
-        round((lenScore * 0.4 + punctScore * 0.3 + stopScore * 0.3) * 10000)
-          .cast("long").as("quality_bp"),
-        when(sDe === m, "de").when(sEn === m, "en").when(sEs === m, "es")
-          .when(sFr === m, "fr").otherwise("zh").as("pred_lang"),
+      val scored = d.select(col("doc_id"), size(w).as("n_tokens"),
+        qualityBp(col("text"), w).as("quality_bp"),
+        predLang(langScores(col("text"), w)).as("pred_lang"),
         fingerprintMd5(col("text")).as("fp"))
       val kept = scored.filter(col("quality_bp") >= 5000)
       val rn = row_number().over(org.apache.spark.sql.expressions.Window

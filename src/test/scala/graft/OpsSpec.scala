@@ -14,6 +14,7 @@ class OpsSpec extends SparkSpec {
       ("2015/02/01", "2015-02-01"),   // yyyy/MM/dd
       ("01.02.2015", "2015-02-01"),   // dot separators unified
       ("01-02-2015", "2015-02-01"),   // dash separators unified
+      (" 01/02/2015 ", "2015-02-01"), // padding stripped
       ("n/a", null),                  // junk → null
       ("", null)
     ).toDF("raw", "want")
@@ -45,34 +46,6 @@ class OpsSpec extends SparkSpec {
     assert(rows(0) == Row("RTA HYDERABAD", null))
     assert(rows(1) == Row(null, "01/02/2015"))
     assert(rows(2) == Row("OFFICE9", "01/02/2015"))
-  }
-
-  test("Classify.fuelClass maps the reference classes") {
-    val cases = Seq("BATTERY POWERED" -> "ELECTRIC", "PETROL/CNG" -> "PETROL",
-      "DIESEL" -> "DIESEL", "CNG ONLY" -> "CNG", "LPG" -> "LPG",
-      "STEAM" -> "OTHERS", null.asInstanceOf[String] -> "OTHERS")
-    val got = cases.map(_._1).toDF("fuel")
-      .select(Classify.fuelClass(col("fuel"))).as[String].collect()
-    assert(got.toSeq == cases.map(_._2))
-  }
-
-  test("Classify.yearFix: 2-digit, 4-digit, embedded, junk") {
-    val cases = Seq("15" -> "2015", "1999" -> "1999",
-      "MODEL X 2018 LX" -> "2018", "junk" -> "UNKNOWN")
-    val got = cases.map(_._1).toDF("y")
-      .select(Classify.yearFix(col("y"))).as[String].collect()
-    assert(got.toSeq == cases.map(_._2))
-  }
-
-  test("Classify.emissionStd extracts and compacts BS levels") {
-    // "BS VI" → "BSV": the alternation tries BS\s?V before BS\s?VI and
-    // Java regex alternation is ordered — faithful to the reference's
-    // pattern (etl2_advclean_and_dimcreatin.py:125), quirk included.
-    val cases = Seq("bs iv engine" -> "BSIV", "BS VI" -> "BSV",
-      "none" -> "UNKNOWN")
-    val got = cases.map(_._1).toDF("e")
-      .select(Classify.emissionStd(col("e"))).as[String].collect()
-    assert(got.toSeq == cases.map(_._2))
   }
 
   test("Dedup.latestPerKey keeps exactly the ordered-first row per key") {

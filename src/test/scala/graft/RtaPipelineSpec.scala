@@ -1,6 +1,7 @@
 package graft
 
 import graft.pipeline.{Etl1, Etl2}
+import org.apache.spark.sql.CacheManagerBridge
 import org.apache.spark.sql.functions._
 
 /** End-to-end pipeline test on an RTA-shaped synthetic CSV: raw →
@@ -213,16 +214,34 @@ class RtaPipelineSpec extends SparkSpec {
   test("fuzzy resolution engages when the dim lacks the exact key") {
     val stageDf = Etl2.keyed(stage)
     // dim with the model one edit away ("SWIFT VDJ" vs "SWIFT VDI"),
-    // same block (sw) and make-year
-    val dv = Seq(("VEH1", "SWIFT", "VDJ BS IV", "2019"))
-      .toDF("VEHICLE_ID", "MODEL_NAME", "VARIANT", "MAKE_YEAR")
-      .withColumn("EMISSION_STANDARD", lit("UNKNOWN"))
-      .withColumn("FUEL", lit("PETROL"))
-    val res = Etl2.resolveVehicles(stageDf, dv)
-      .filter($"tempRegistrationNumber" === "TR001").collect()
+    // same block (sw); TR001's make-year is 2019
+    def resolveTr001(makeYear: String) = {
+      val dv = Seq(("VEH1", "SWIFT", "VDJ BS IV", makeYear))
+        .toDF("VEHICLE_ID", "MODEL_NAME", "VARIANT", "MAKE_YEAR")
+        .withColumn("EMISSION_STANDARD", lit("UNKNOWN"))
+        .withColumn("FUEL", lit("PETROL"))
+      Etl2.resolveVehicles(stageDf, dv)
+        .filter($"tempRegistrationNumber" === "TR001").collect()
+    }
+    val res = resolveTr001("2019")
     assert(res.length == 1)
     assert(res.head.getAs[String]("VEHICLE_ID_resolved") == "VEH1")
     assert(res.head.getAs[Boolean]("IS_FUZZY_MATCH"))
     assert(res.head.getAs[Int]("LEV_DIST") == 1)
+    // the make-year is a block key: a fuzzy match never crosses years
+    assert(resolveTr001("2018").isEmpty)
+  }
+
+  test("Etl2.run leaves no cached frame after CacheReleases.releaseAll") {
+    // a stage of its own: a plan another run left cached would be
+    // found again, not added, and hide a leak
+    val root = dirs
+    Etl1.run(spark, s"$root/raw.csv", s"$root/stage-rerun")
+    def cached = CacheManagerBridge.numCachedEntries(spark)
+    val before = cached
+    Etl2.run(spark, s"$root/stage-rerun", s"$root/gold-rerun")
+    CacheReleases.releaseAll()
+    assert(cached <= before,
+      "Etl2.run must unpersist its frames or register them with CacheReleases")
   }
 }
