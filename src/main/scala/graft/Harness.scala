@@ -8,20 +8,22 @@ import org.apache.spark.sql.SparkSession
   * cannot drift apart. */
 object Harness {
   /** Local session on `cpus` threads (one shuffle partition per
-    * thread), UTC, ANSI off, AQE on, no UI. Log level ERROR:
-    * [[clearState]]'s blanket unpersist of the lazy localCheckpoint
-    * RDDs (Components) emits thousands of harmless "cannot be
-    * recomputed after unpersisting" WARN lines per run. */
+    * thread), under [[Q.Base]] with the native functions registered,
+    * AQE on, no UI; so a query without its own conf builds on it
+    * directly. Log level ERROR: [[clearState]]'s blanket unpersist of
+    * the lazy localCheckpoint RDDs (Components) emits thousands of
+    * harmless "cannot be recomputed after unpersisting" WARN lines per
+    * run. */
   def session(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
+      .config(Q.Base)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    graft.functions.GraftExtensions.register(spark)
     spark
   }
 

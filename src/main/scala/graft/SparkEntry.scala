@@ -17,8 +17,8 @@ object SparkEntry {
     * rows>0. Star-style: deterministic newest-order-per-customer dedup
     * (etl1:68-70 semantics) → dim joins (etl2:256-258 semantics) →
     * aggregate by region. */
-  def entry(spark: SparkSession): DataFrame = {
-    Tables.ensureConf(spark)
+  def entry(caller: SparkSession): DataFrame = {
+    val spark = Tables.sessionUnder(caller, Q.Base)
     val dir = "/root/testdata/sf0.001"
     val o = Tables.load(spark, dir, "orders")
     val c = Tables.load(spark, dir, "customer")
@@ -35,16 +35,18 @@ object SparkEntry {
         sum(round(col("o_totalprice") * 100).cast("long")).as("latest_price_cents"))
   }
 
-  /** One entry per operator from SURVEY.md §2. A query declaring
-    * [[Q.conf]] builds on a clone of the caller's session (conf,
+  /** One entry per operator from SURVEY.md §2. A query runs under
+    * [[Q.Base]] plus its own [[Q.conf]]. It builds on the caller's
+    * session when all of that already holds there (a [[Harness]]
+    * session holds the base), and otherwise on a clone of it (conf,
     * functions and listeners kept) with that conf applied, so its eager
     * actions and the caller's terminal action run under it and the
-    * caller's session is untouched. Cloning adds a few ms a build, so a
-    * query with no conf builds on the caller's session. */
+    * caller's session is untouched. Cloning adds a few ms a build. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map { q =>
+      val conf = Q.Base ++ q.conf
       q.name -> { (spark: SparkSession, dir: String) =>
-        q.build(if (q.conf.isEmpty) spark else Tables.cloneWith(spark, q.conf), dir)
+        q.build(Tables.sessionUnder(spark, conf), dir)
       }
     }.toMap
 

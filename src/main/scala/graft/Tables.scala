@@ -2,14 +2,10 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Fixture-table access + session conf the whole engine assumes.
-  *
-  * The reference runs Spark 3 with non-ANSI semantics and
-  * `spark.sql.legacy.timeParserPolicy=LEGACY` (reference
-  * etl1_clean_and_stage.py:23, etl2_advclean_and_dimcreatin.py:46).
-  * We pin non-ANSI + UTC at every entry point so query semantics match
-  * the classic DataFrame behavior (to_date → null on bad input, casts
-  * never throw) and so the DuckDB oracle agrees on day truncation.
+/** Fixture-table access, staging paths and the session-conf helpers.
+  * The conf the whole engine assumes is [[Q.Base]]: [[Harness]]
+  * sessions start with it, `SparkEntry.queries` builds on a clone where
+  * it does not hold, and the pipeline jobs scope it with [[withConf]].
   */
 object Tables {
   /** Staging root for every fixture write, roundtrip sink, and stream
@@ -63,12 +59,12 @@ object Tables {
     * once per 10 min): bumps each existing ns root's mtime AND a
     * heartbeat file inside it, so the dead-run sweep's age test
     * measures time since LAST USE, not since first write. Called from
-    * [[ensureConf]] and [[load]] — hooks that actually fire on every
-    * query build for a session's whole life. The former in-[[staging]]
-    * touch was dead code (round-12 ADVICE): every staging() call site
-    * is a top-level val evaluated once at object init, before any
-    * namespace dir exists, so a >3 h run's files could be reaped by a
-    * concurrent JVM's sweep while its DuckDB compare was still queued. */
+    * [[load]], which fires on nearly every query build for a session's
+    * whole life. The touch in [[staging]] alone would not do (round-12
+    * ADVICE): every staging() call site is a top-level val evaluated
+    * once at object init, before any namespace dir exists, so a >3 h
+    * run's files could be reaped by a concurrent JVM's sweep while its
+    * DuckDB compare was still queued. */
   private def touchNs(): Unit = {
     val now = System.currentTimeMillis()
     if (now - lastNsTouch > 10L * 60 * 1000) {
@@ -183,45 +179,14 @@ object Tables {
   /** A scratch path under [[streamScratchDir]]. */
   def streamScratch(sub: String): String = s"$streamScratchDir/$sub"
 
-  /** Idempotent; call at the top of every query builder so semantics do
-    * not depend on who created the session. */
-  def ensureConf(spark: SparkSession): Unit = {
-    touchNs()
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // With ANSI off, Spark keeps the legacy sentinel size(NULL) = -1,
-    // which no SQL oracle mirrors (DuckDB len(NULL) = NULL) — it
-    // hash-failed q_jsonl_scan for three driver runs on the
-    // missing-`tags` fixture row. Every other size() call site in this
-    // repo operates on split/transform outputs that cannot be NULL
-    // (audited round 6; pinned by NullSentinelSpec), so flipping the
-    // legacy conf changes exactly the NULL case and kills the whole
-    // sentinel class rather than one call site.
-    spark.conf.set("spark.sql.legacy.sizeOfNull", "false")
-    // Round 6: per-doc side tables (e.g. the nn set-size tables in the
-    // dedup family) lost their forced broadcast() hints — a pinned
-    // doc-cardinality broadcast is an OOM at 1B+ docs. The default
-    // 10 MB STATIC threshold then demoted those joins to shuffles of
-    // the far larger pair side at sf10 (nn ≈ 8 MB est.; jaccard
-    // 46→83 s). Raising the STATIC threshold instead is a trap: it
-    // works on parquet-compressed size estimates, so a 57 MB documents
-    // scan made the planner broadcast 50M-row exploded shingle frames
-    // (measured heap OOM at sf10). The ADAPTIVE threshold is the right
-    // dial — AQE re-plans SMJ→broadcast from ACTUAL post-shuffle
-    // sizes: the genuinely-small sides (nn ≈ 16 MB real) convert, the
-    // multi-GB index sides never do, and nothing is pinned at cluster
-    // scale.
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold",
-      (64 * 1024 * 1024).toString)
-    // Parquet written without isAdjustedToUTC (e.g. by DuckDB or Hive)
-    // would otherwise surface TIMESTAMP_NTZ, which epoch arithmetic
-    // (CAST(ts AS BIGINT)) rejects at analysis time — found by the sf1
-    // spot-check, whose DuckDB-built fixture broke q_events_sessionize.
-    // With the session pinned to UTC the two flavors are numerically
-    // identical, so read both as TIMESTAMP.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    // events' TIMESTAMP(NANOS) as raw longs; see [[loadEvents]]
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  /** Apply [[Q.Base]] to `spark` and register the native functions, for
+    * a session built outside [[Harness]] whose own SQL should run under
+    * the engine's conf. The registry does not need it:
+    * `SparkEntry.queries` builds on a clone when the base does not hold. */
+  def ensureConf(spark: SparkSession): Unit = install(spark, Q.Base)
+
+  private def install(spark: SparkSession, conf: Map[String, String]): Unit = {
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
     graft.functions.GraftExtensions.register(spark)
   }
 
@@ -238,11 +203,20 @@ object Tables {
     }
   }
 
-  /** A clone of `spark` with `conf` applied; the caller's session is
-    * untouched. */
+  /** The session to build on under `conf`: `spark` itself when every
+    * entry of `conf` already holds there and the native functions are
+    * registered, else [[cloneWith]]. Checking before installing leaves
+    * the caller's session as it was in both cases. */
+  def sessionUnder(spark: SparkSession, conf: Map[String, String]): SparkSession =
+    if (conf.forall { case (k, v) => spark.conf.getOption(k).contains(v) } &&
+        graft.functions.GraftExtensions.registered(spark)) spark
+    else cloneWith(spark, conf)
+
+  /** A clone of `spark` with `conf` applied and the native functions
+    * registered; the caller's session is untouched. */
   def cloneWith(spark: SparkSession, conf: Map[String, String]): SparkSession = {
     val s = org.apache.spark.sql.SessionClone(spark)
-    conf.foreach { case (k, v) => s.conf.set(k, v) }
+    install(s, conf)
     s
   }
 
@@ -253,7 +227,7 @@ object Tables {
   }
 
   /** `events.parquet` carries TIMESTAMP(NANOS), read as raw longs under
-    * [[ensureConf]]'s `nanosAsLong`; integer-divide them to
+    * [[Q.Base]]'s `nanosAsLong`; integer-divide them to
     * microseconds — the fixture generator emits µs-granular values, so
     * the narrowing is lossless. `div` (integral divide) is load-bearing:
     * a double-typed `/` on ~1.7e18 ns loses precision past 2^53. */
@@ -271,8 +245,8 @@ object Tables {
 
 /** One verifiable operator: a Spark builder + (optionally) equivalent
   * ANSI SQL the driver runs in DuckDB over the same parquet tables.
-  * `conf` is the session conf the query runs under (see
-  * `SparkEntry.queries`). */
+  * `conf` is the session conf the query runs under on top of
+  * [[Q.Base]] (see `SparkEntry.queries`). */
 final case class Q(
     name: String,
     build: (SparkSession, String) => DataFrame,
@@ -281,6 +255,48 @@ final case class Q(
     conf: Map[String, String] = Map.empty)
 
 object Q {
+  /** The session conf every query and the pipeline run under. The
+    * reference runs Spark 3 with non-ANSI semantics (reference
+    * etl1_clean_and_stage.py:23, etl2_advclean_and_dimcreatin.py:46):
+    * ANSI off and UTC make query semantics match the classic DataFrame
+    * behavior (to_date → null on bad input, casts never throw) and let
+    * the DuckDB oracle agree on day truncation. */
+  val Base: Map[String, String] = Map(
+    "spark.sql.ansi.enabled" -> "false",
+    "spark.sql.session.timeZone" -> "UTC",
+    // With ANSI off, Spark keeps the legacy sentinel size(NULL) = -1,
+    // which no SQL oracle mirrors (DuckDB len(NULL) = NULL) — it
+    // hash-failed q_jsonl_scan for three driver runs on the
+    // missing-`tags` fixture row. Every other size() call site in this
+    // repo operates on split/transform outputs that cannot be NULL
+    // (audited round 6; pinned by NullSentinelSpec), so flipping the
+    // legacy conf changes exactly the NULL case and kills the whole
+    // sentinel class rather than one call site.
+    "spark.sql.legacy.sizeOfNull" -> "false",
+    // Round 6: per-doc side tables (e.g. the nn set-size tables in the
+    // dedup family) lost their forced broadcast() hints — a pinned
+    // doc-cardinality broadcast is an OOM at 1B+ docs. The default
+    // 10 MB STATIC threshold then demoted those joins to shuffles of
+    // the far larger pair side at sf10 (nn ≈ 8 MB est.; jaccard
+    // 46→83 s). Raising the STATIC threshold instead is a trap: it
+    // works on parquet-compressed size estimates, so a 57 MB documents
+    // scan made the planner broadcast 50M-row exploded shingle frames
+    // (measured heap OOM at sf10). The ADAPTIVE threshold is the right
+    // dial — AQE re-plans SMJ→broadcast from ACTUAL post-shuffle
+    // sizes: the genuinely-small sides (nn ≈ 16 MB real) convert, the
+    // multi-GB index sides never do, and nothing is pinned at cluster
+    // scale.
+    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> (64 * 1024 * 1024).toString,
+    // Parquet written without isAdjustedToUTC (e.g. by DuckDB or Hive)
+    // would otherwise surface TIMESTAMP_NTZ, which epoch arithmetic
+    // (CAST(ts AS BIGINT)) rejects at analysis time — found by the sf1
+    // spot-check, whose DuckDB-built fixture broke q_events_sessionize.
+    // With the session pinned to UTC the two flavors are numerically
+    // identical, so read both as TIMESTAMP.
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
+    // events' TIMESTAMP(NANOS) as raw longs; see Tables.loadEvents
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+
   /** Whole-stage fusion off (round 14). The RTA star/scd2/date-parse
     * family builds VERY wide projections (dozens of chained
     * regexp/when/date expressions per row). Fusing them into one

@@ -10,7 +10,8 @@ import org.apache.spark.sql.types.IntegerType
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions`
   * injects the native functions into every session built from that
   * config. The in-process path ([[GraftExtensions.register]], called
-  * by Tables.ensureConf) reads the same table.
+  * when Harness builds a session and when Tables clones one) reads the
+  * same table.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -70,6 +71,12 @@ object GraftExtensions {
 
   private def info(name: String) =
     new ExpressionInfo(classOf[GraftExtensions].getName, name)
+
+  /** Every native function is registered on `spark`'s session. */
+  def registered(spark: SparkSession): Boolean = {
+    val reg = spark.sessionState.functionRegistry
+    functions.forall { case (name, _, _) => reg.functionExists(FunctionIdentifier(name)) }
+  }
 
   /** Idempotent session-level registration; `call_function` then makes
     * the expressions usable from the Column API without depending on

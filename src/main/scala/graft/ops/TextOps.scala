@@ -62,7 +62,8 @@ object TextOps {
     * form would give the whole-doc empty shingle [""], and the DuckDB
     * list_distinct drops NULLs for 0 — the three disagreed before this
     * kernel existed; fixture text is non-null, so none of them fires).
-    * Requires GraftExtensions.register (done in Tables.ensureConf). */
+    * Requires GraftExtensions.register (done by Harness.session and
+    * Tables.cloneWith). */
   def shingleHashes(wordsCol: Column): Column =
     call_function("graft_shingle_hashes", wordsCol)
 
@@ -74,7 +75,8 @@ object TextOps {
   /** Multiset join-overlap Σ cnt_a(v)·cnt_b(v) of two hash arrays —
     * the row-local equivalent of `explode JOIN explode` + count
     * (native kernel; see TextExpressions.PairOverlap). Requires
-    * GraftExtensions.register (done in Tables.ensureConf). */
+    * GraftExtensions.register (done by Harness.session and
+    * Tables.cloneWith). */
   def pairOverlap(a: Column, b: Column): Column =
     call_function("graft_pair_overlap", a, b)
 
@@ -83,7 +85,7 @@ object TextOps {
     * the native `graft_minhash` expression — one codegen'd loop
     * produces all k mins (the fold variant below runs 8 interpreted
     * `aggregate` lambdas per row). Requires GraftExtensions.register
-    * (done in Tables.ensureConf). */
+    * (done by Harness.session and Tables.cloneWith). */
   def minhashSignature(hashes: Column): Column =
     call_function("graft_minhash", hashes)
 
@@ -118,7 +120,8 @@ object TextOps {
   /** SimHash via the native 60-bit kernel — row-local inside
     * whole-stage codegen, no explode/shuffle/aggregate. Bit-identical
     * to [[simhashGrouped]] (PropertySpec cross-checks). Requires
-    * GraftExtensions.register (done in Tables.ensureConf). */
+    * GraftExtensions.register (done by Harness.session and
+    * Tables.cloneWith). */
   def simhash60Native(hashesCol: Column): Column =
     call_function("graft_simhash60", hashesCol)
 

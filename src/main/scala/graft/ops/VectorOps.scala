@@ -75,7 +75,8 @@ object VectorOps {
     * one codegen'd loop over the ArrayData buffers instead of a
     * 129-node unrolled tree. Same left-assoc accumulation →
     * bit-identical to [[dotUnrolled]]. Requires
-    * GraftExtensions.register (done in Tables.ensureConf). */
+    * GraftExtensions.register (done by Harness.session and
+    * Tables.cloneWith). */
   def dotNative(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
   /** Native normalized projection: vn = v / sqrt(dot(v, v)), two

@@ -100,11 +100,12 @@ object Etl1 {
         col("year").isNotNull && col("month").isNotNull)
   }
 
-  /** CSV in → partitioned stage Parquet out (etl1:59,145), LEGACY
-    * time parsing inside (etl1:23). */
+  /** CSV in → partitioned stage Parquet out (etl1:59,145), under
+    * [[graft.Q.Base]] and LEGACY time parsing (etl1:23); the caller's
+    * conf is restored on the way out. */
   def run(spark: SparkSession, inputPath: String, stagePath: String,
       schema: Option[org.apache.spark.sql.types.StructType] = None): Unit =
-    graft.Tables.withConf(spark, graft.Q.LegacyTime.toSeq: _*) {
+    graft.Tables.withConf(spark, (graft.Q.Base ++ graft.Q.LegacyTime).toSeq: _*) {
       val reader = spark.read.option("header", true)
       val raw = schema match {
         case Some(s) => reader.schema(s).csv(inputPath)

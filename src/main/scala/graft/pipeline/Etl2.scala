@@ -190,12 +190,13 @@ object Etl2 {
   }
 
   /** Stage parquet in → gold parquet out, with the sized fact sink
-    * (etl2:285-331), LEGACY time parsing inside (etl2:46). The keyed
+    * (etl2:285-331), under [[graft.Q.Base]] and LEGACY time parsing
+    * (etl2:46); the caller's conf is restored on the way out. The keyed
     * plan and dim_vehicle are cached for the duration — four sinks
     * share one evaluation — and unpersisted on the way out; the match
     * frame goes to `CacheReleases` with every other builder's. */
   def run(spark: SparkSession, stagePath: String, outRoot: String): Unit =
-    graft.Tables.withConf(spark, graft.Q.LegacyTime.toSeq: _*) {
+    graft.Tables.withConf(spark, (graft.Q.Base ++ graft.Q.LegacyTime).toSeq: _*) {
       val df = keyed(spark.read.parquet(stagePath)).cache()
       val (dv, dm, dr) = dimensions(df)
       val dvCached = dv.cache()

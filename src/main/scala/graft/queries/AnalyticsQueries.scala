@@ -24,7 +24,6 @@ object AnalyticsQueries {
   val qPivotStatus = Q(
     "q_pivot_status",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       load(spark, dir, "orders")
         .groupBy("o_orderpriority")
         .pivot("o_orderstatus", Seq("F", "O", "P"))
@@ -45,7 +44,6 @@ object AnalyticsQueries {
   val qWindowRunning = Q(
     "q_window_running",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
       val wRows = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -72,7 +70,6 @@ object AnalyticsQueries {
   val qSetOps = Q(
     "q_set_ops",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val o = load(spark, dir, "orders")
       def ofYear(y: Int) =
         o.filter(year(col("o_orderdate")) === y).select("o_custkey")
@@ -100,7 +97,6 @@ object AnalyticsQueries {
   val qAsofJoin = Q(
     "q_asof_join",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val w = Window.partitionBy("user_id")
         .orderBy(col("ts").asc, col("event_id").asc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -126,7 +122,6 @@ object AnalyticsQueries {
   val qJoinSalted = Q(
     "q_join_salted",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val SaltN = 8
       val l = load(spark, dir, "lineitem")
         .withColumn("salt", pmod(col("l_linenumber"), lit(SaltN)).cast("int"))
@@ -153,7 +148,6 @@ object AnalyticsQueries {
   val qTextTopTerms = Q(
     "q_text_top_terms",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       load(spark, dir, "documents")
         .select(explode(words(col("text"))).as("term"))
         .filter(length(col("term")) > 0)
@@ -176,7 +170,6 @@ object AnalyticsQueries {
   val qMedianWindow = Q(
     "q_median_window",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val w = Window.partitionBy("o_orderpriority")
         .orderBy(cents("o_totalprice").asc, col("o_orderkey").asc)
       val wAll = Window.partitionBy("o_orderpriority")
@@ -225,7 +218,6 @@ object AnalyticsQueries {
   val qApproxSketches = Q(
     "q_approx_sketches",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val base = load(spark, dir, "orders")
         .select(col("o_orderpriority"), col("o_custkey"), col("o_orderkey"),
           cents("o_totalprice").as("c"))
@@ -287,7 +279,6 @@ object AnalyticsQueries {
   val qCmsHeavyHitters = Q(
     "q_cms_heavy_hitters",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val eps = 0.001
       val terms = load(spark, dir, "documents")
         .select(explode(words(col("text"))).as("term"))
@@ -330,7 +321,6 @@ object AnalyticsQueries {
   val qEventsJson = Q(
     "q_events_json",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       load(spark, dir, "events")
         .withColumn("j", from_json(col("props"),
           org.apache.spark.sql.types.StructType.fromDDL("k INT")))
@@ -352,7 +342,6 @@ object AnalyticsQueries {
   val qWindowRanks = Q(
     "q_window_ranks",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val w = Window.partitionBy("o_orderpriority")
         .orderBy(cents("o_totalprice").desc, col("o_orderkey").asc)
       load(spark, dir, "orders").select(
@@ -381,7 +370,6 @@ object AnalyticsQueries {
   val qTopkPerKey = Q(
     "q_topk_per_key",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val topk = udaf(new graft.functions.TopKAgg(3),
         org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Long, Long)]())
       load(spark, dir, "orders")
@@ -406,7 +394,6 @@ object AnalyticsQueries {
   val qArrayPos = Q(
     "q_array_pos",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       load(spark, dir, "documents")
         .filter(col("doc_id") % 10 === 0)
         .select(col("doc_id"), posexplode(words(col("text"))))
@@ -435,7 +422,6 @@ object AnalyticsQueries {
   val qStatsCorr = Q(
     "q_stats_corr",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val x = round(col("l_quantity")).cast("long")
       val y = round(col("l_extendedprice")).cast("long")
       val dec = org.apache.spark.sql.types.DecimalType(38, 0)
@@ -506,7 +492,6 @@ object AnalyticsQueries {
   val qListagg = Q(
     "q_listagg",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val o = load(spark, dir, "orders")
       o.groupBy("o_custkey")
         .agg(count(lit(1)).as("n_orders"),
@@ -533,7 +518,6 @@ object AnalyticsQueries {
   val qGapfill = Q(
     "q_gapfill",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val o = load(spark, dir, "orders").filter(col("o_custkey") % 25 === 0)
       val m = o.select(col("o_custkey"),
         (year(col("o_orderdate")) * 12 + (month(col("o_orderdate")) - 1)).as("midx"),
@@ -572,7 +556,6 @@ object AnalyticsQueries {
   val qWindowFirstLast = Q(
     "q_window_firstlast",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
       val full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -645,7 +628,6 @@ object AnalyticsQueries {
   val qScd2Orders = Q(
     "q_scd2_orders",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       scd2History(ordersProjected(spark, dir))
     },
     Some(scd2Sql),
@@ -670,7 +652,6 @@ object AnalyticsQueries {
   val qScd2Merge = Q(
     "q_scd2_merge",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val cutoff = "2001-06-01"
       val o = ordersProjected(spark, dir)
       val hist = scd2History(o.filter(col("d") < lit(cutoff)))
@@ -696,7 +677,6 @@ object AnalyticsQueries {
   val qScd2Fold = Q(
     "q_scd2_fold",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val cutoff = "2001-06-01"
       val o = ordersProjected(spark, dir)
       val hist = graft.ops.Scd2.history(o.filter(col("d") < lit(cutoff)))
@@ -728,7 +708,6 @@ object AnalyticsQueries {
   val qZorderCluster = Q(
     "q_zorder_cluster",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       import graft.ops.Layout.zorder16
       // Min-max normalize each dimension to the full 16-bit domain
       // first (integral arithmetic; the tiny extent row broadcasts):
@@ -792,7 +771,6 @@ object AnalyticsQueries {
   val qRangeLayout = Q(
     "q_range_layout",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       Tables.load(spark, dir, "orders")
         .withColumn("o_date", to_date(col("o_orderdate")))
         .repartitionByRange(8, col("o_date"))
@@ -827,7 +805,6 @@ object AnalyticsQueries {
   val qAnomalyZscore = Q(
     "q_anomaly_zscore",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val dec = org.apache.spark.sql.types.DecimalType(38, 0)
       val o = load(spark, dir, "orders")
       val c = load(spark, dir, "customer")
@@ -895,7 +872,6 @@ object AnalyticsQueries {
   val qLagFeatures = Q(
     "q_lag_features",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("d").asc, col("o_orderkey").asc)
       load(spark, dir, "orders")
@@ -933,7 +909,6 @@ object AnalyticsQueries {
   val qAssocRules = Q(
     "q_assoc_rules",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val p = load(spark, dir, "part").select(col("p_partkey"), col("p_brand"))
       // One order-keyed aggregate replaces the old distinct + self-join
       // on `o` (round 13, guide §2 — shuffle removal): collect_set

@@ -19,7 +19,6 @@ object CoreQueries {
   val q1PricingSummary = Q(
     "q1_pricing_summary",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val li = load(spark, dir, "lineitem")
       li.groupBy("l_returnflag", "l_linestatus").agg(
         sum(col("l_quantity")).cast("long").as("sum_qty"),
@@ -42,7 +41,6 @@ object CoreQueries {
   val qDedupLatest = Q(
     "q_dedup_latest",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val o = load(spark, dir, "orders")
       Dedup.latestPerKey(o, Seq("o_custkey"),
         Seq(col("o_orderdate").desc, col("o_orderkey").desc))
@@ -64,7 +62,6 @@ object CoreQueries {
   val qDateParseMulti = Q(
     "q_date_parse_multi",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val o = load(spark, dir, "orders")
       val k = col("o_orderkey")
       val raw = when(k % 11 === 0, lit("not a date"))
@@ -106,7 +103,6 @@ object CoreQueries {
   val qDateParseYy = Q(
     "q_date_parse_yy",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val o = load(spark, dir, "orders")
       val k = col("o_orderkey")
       val yy = when(k % 2 === 0, k % 31).otherwise(lit(60) + k % 40)
@@ -139,7 +135,6 @@ object CoreQueries {
   val qSurrogateKeys = Q(
     "q_surrogate_keys",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val p = load(spark, dir, "part")
       p.select(
         Keys.sha(Norm.lowerTrim(col("p_name")), Norm.lowerTrim(col("p_brand")),
@@ -165,7 +160,6 @@ object CoreQueries {
   val qMisalignRepair = Q(
     "q_misalign_repair",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val c = load(spark, dir, "customer")
       val k = col("c_custkey")
       val officeRaw = when(k % 7 === 0, lit(null).cast("string"))
@@ -201,7 +195,6 @@ object CoreQueries {
   val qArrayModelWords = Q(
     "q_array_model_words",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val p = load(spark, dir, "part")
       val words = split(Norm.cleanModelDesc(col("p_name")), "\\s+")
       p.select(col("p_partkey"),
@@ -227,7 +220,6 @@ object CoreQueries {
   val qDistinctKeys = Q(
     "q_distinct_keys",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       load(spark, dir, "customer").select("c_mktsegment", "c_nationkey").distinct()
     },
     Some("SELECT DISTINCT c_mktsegment, c_nationkey FROM customer"),
@@ -239,7 +231,6 @@ object CoreQueries {
   val qTopkGlobal = Q(
     "q_topk_global",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       load(spark, dir, "orders")
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
         .limit(20)
@@ -255,7 +246,6 @@ object CoreQueries {
   val qCounts = Q(
     "q_counts",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       Seq("customer", "orders", "lineitem", "part")
         .map(t => load(spark, dir, t)
           .agg(count(lit(1)).as("n")).select(lit(t).as("tbl"), col("n")))
@@ -301,7 +291,6 @@ object CoreQueries {
   val qCsvScan = Q(
     "q_csv_scan",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val p = java.nio.file.Paths.get(csvFixturePath)
       java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.write(p,
@@ -350,7 +339,6 @@ object CoreQueries {
   val qPartitionedRoundtrip = Q(
     "q_partitioned_roundtrip",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       load(spark, dir, "orders")
         .withColumn("o_year", year(col("o_orderdate")))
         .write.mode("overwrite").partitionBy("o_year")
@@ -395,7 +383,6 @@ object CoreQueries {
   val qJsonlScan = Q(
     "q_jsonl_scan",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val p = java.nio.file.Paths.get(jsonlFixturePath)
       java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.write(p,
@@ -437,7 +424,6 @@ object CoreQueries {
   val qOrcRoundtrip = Q(
     "q_orc_roundtrip",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       load(spark, dir, "lineitem")
         .write.mode("overwrite").orc(orcRoundtripPath)
       spark.read.orc(orcRoundtripPath)
@@ -469,7 +455,6 @@ object CoreQueries {
   val qUrlExtract = Q(
     "q_url_extract",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       load(spark, dir, "documents")
         .select(col("doc_id"), col("source"), col("lang"))
         .withColumn("url", concat(
@@ -509,7 +494,6 @@ object CoreQueries {
   val qUrlCanonical = Q(
     "q_url_canonical",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       import org.apache.spark.sql.expressions.Window
       val raw = load(spark, dir, "documents")
         .select(col("doc_id"), col("source"), col("lang"))
@@ -564,7 +548,6 @@ object CoreQueries {
   val qSplitHoldout = Q(
     "q_split_holdout",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val d = load(spark, dir, "documents")
       val bucket = pmod(graft.ops.TextOps.stringHash(col("doc_id").cast("string")), lit(100))
       d.select(col("doc_id"),

@@ -16,7 +16,6 @@ object EventQueries {
   val qEventsWindow = Q(
     "q_events_window",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       EventOps.windowedCounts(load(spark, dir, "events"))
     },
     Some("""SELECT time_bucket(INTERVAL 1 HOUR, ts) AS window_start,
@@ -31,7 +30,6 @@ object EventQueries {
   val qEventsSessionize = Q(
     "q_events_sessionize",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       EventOps.sessionizeBatch(load(spark, dir, "events"))
     },
     Some("""WITH g AS (
@@ -61,7 +59,6 @@ object EventQueries {
   val qMultimodalDecode = Q(
     "q_multimodal_decode",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val packed = Multimodal.packPpm(load(spark, dir, "documents"), "doc_id", "text")
       Multimodal.decodeFeatures(packed).toDF()
     },
@@ -91,7 +88,6 @@ object EventQueries {
   val qMultimodalAudio = Q(
     "q_multimodal_audio",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val packed = Multimodal.packWav(load(spark, dir, "documents"), "doc_id", "text")
       Multimodal.decodeAudio(packed).toDF()
     },
@@ -122,7 +118,6 @@ object EventQueries {
   val qAudioFrames = Q(
     "q_audio_frames",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val packed = Multimodal.packWav(load(spark, dir, "documents"), "doc_id", "text")
       Multimodal.frameEnergies(packed, 256).toDF()
     },
@@ -151,7 +146,6 @@ object EventQueries {
   val qMultimodalFrames = Q(
     "q_multimodal_frames",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val packed = Multimodal.packPpm(load(spark, dir, "documents"), "doc_id", "text")
       val feats = Multimodal.decodeFeatures(packed).toDF()
       Multimodal.sampleFrames(Multimodal.fitSquare(feats, 224), 4)
@@ -182,7 +176,6 @@ object EventQueries {
   val qRollupAgg = Q(
     "q_rollup_agg",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       load(spark, dir, "lineitem")
         .rollup("l_returnflag", "l_linestatus")
         .agg(count(lit(1)).as("n"),
@@ -197,7 +190,6 @@ object EventQueries {
   val qCubeAgg = Q(
     "q_cube_agg",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       load(spark, dir, "orders")
         .cube("o_orderstatus", "o_orderpriority")
         .agg(count(lit(1)).as("n"))
@@ -214,7 +206,6 @@ object EventQueries {
   val qEventsRolling = Q(
     "q_events_rolling",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("user_id")
         .orderBy(col("ts").cast("long"))
@@ -241,7 +232,6 @@ object EventQueries {
   val qEventsFunnel = Q(
     "q_events_funnel",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val e = load(spark, dir, "events").select("user_id", "event_type", "ts")
       val s1 = e.filter(col("event_type") === "signup")
         .groupBy("user_id").agg(min(col("ts")).as("t1"))
@@ -277,7 +267,6 @@ object EventQueries {
   val qEventsSliding = Q(
     "q_events_sliding",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       // project to the 3 needed columns (with cents already derived)
       // BEFORE the window generate: the generate doubles every row, so
       // the doubled rows must be narrow — at 100 TB the difference is
@@ -317,7 +306,6 @@ object EventQueries {
   val qJoinRange = Q(
     "q_join_range",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       // persist: both the window derivation and the probe side consume
       // this projection — without the cache the events scan (and the
       // nanos-ts conversion) runs twice
@@ -365,7 +353,6 @@ object EventQueries {
   val qAttribution = Q(
     "q_attribution",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       import org.apache.spark.sql.expressions.Window
       val e = load(spark, dir, "events").select(
         col("user_id"), col("event_id"), col("event_type"),
@@ -436,7 +423,6 @@ object EventQueries {
   val qMultimodalDedup = Q(
     "q_multimodal_dedup",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       import spark.implicits._
       val docs = load(spark, dir, "documents")
       // Representative text per duplicate class = the class's MIN
@@ -489,7 +475,6 @@ object EventQueries {
   val qSlidingDistinct = Q(
     "q_sliding_distinct",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val ev = load(spark, dir, "events")
       val dayUser = ev.select(to_date(col("ts")).as("day"), col("user_id"))
         .distinct()
@@ -523,7 +508,6 @@ object EventQueries {
   val qRetentionCohorts = Q(
     "q_retention_cohorts",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val ev = load(spark, dir, "events")
       val userWeek = ev
         .select(col("user_id"), trunc(to_date(col("ts")), "week").as("week"))
@@ -561,7 +545,6 @@ object EventQueries {
   val qIntervalMerge = Q(
     "q_interval_merge",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       import org.apache.spark.sql.expressions.Window
       val iv = load(spark, dir, "events").select(
         col("user_id"), col("event_id"),
@@ -621,7 +604,6 @@ object EventQueries {
   val qMaxConcurrency = Q(
     "q_max_concurrency",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val iv = load(spark, dir, "events").select(
         col("event_id"), col("ts").cast("long").as("s"),
         (col("ts").cast("long") + 300L).as("e"))

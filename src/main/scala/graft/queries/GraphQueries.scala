@@ -58,7 +58,6 @@ object GraphQueries {
   val qPagerank = Q(
     "q_pagerank",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val edges = handoffEdges(spark, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val nodes = edges.select(col("src").as("node"))
@@ -150,7 +149,6 @@ object GraphQueries {
   val qTriangleCount = Q(
     "q_triangle_count",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val directed = handoffEdges(spark, dir)
       // seeded cliques: users u ≡ 0 (mod 97) contribute the triangle
       // {u, u+1, u+2}. The organic handoff chains stop closing wedges

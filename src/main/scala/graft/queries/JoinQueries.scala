@@ -17,7 +17,6 @@ object JoinQueries {
   val qJoinBroadcastLeft = Q(
     "q_join_broadcast_left",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val li = load(spark, dir, "lineitem")
       val p = load(spark, dir, "part")
       li.join(broadcast(p), li("l_partkey") === p("p_partkey"), "left")
@@ -35,7 +34,6 @@ object JoinQueries {
   val qJoinAnti = Q(
     "q_join_anti",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val c = load(spark, dir, "customer")
       val big = load(spark, dir, "orders").filter(col("o_totalprice") >= 350000)
       // the filtered right side is tiny — broadcast it so the anti-join
@@ -54,7 +52,6 @@ object JoinQueries {
   val qJoinSemi = Q(
     "q_join_semi",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val s = load(spark, dir, "supplier")
       val li = load(spark, dir, "lineitem")
       s.join(li.select(col("l_suppkey").as("s_suppkey")), Seq("s_suppkey"), "left_semi")
@@ -75,7 +72,6 @@ object JoinQueries {
   val qResolutionFuzzy = Q(
     "q_resolution_fuzzy",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val p = load(spark, dir, "part")
       val k = col("p_partkey")
       val dv = p.select(lower(trim(col("p_name"))).as("model_norm"))
@@ -131,7 +127,6 @@ object JoinQueries {
   val qUnionAllowMissing = Q(
     "q_union_allow_missing",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val o = load(spark, dir, "orders")
       val high = o.filter(col("o_totalprice") >= 100000)
         .select(col("o_orderkey"), lit("HIGH").as("tier"),
@@ -156,7 +151,6 @@ object JoinQueries {
   val qDimBuild = Q(
     "q_dim_build",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val p = load(spark, dir, "part")
       val keyed = p.select(
         sha2(concat_ws("|", lower(trim(col("p_brand"))), lower(trim(col("p_type")))), 256)
@@ -188,7 +182,6 @@ object JoinQueries {
   val qFactAssembly = Q(
     "q_fact_assembly",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val o = load(spark, dir, "orders")
       val c = load(spark, dir, "customer")
       val n = load(spark, dir, "nation")
@@ -224,7 +217,6 @@ object JoinQueries {
   val qDateDim = Q(
     "q_date_dim",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val o = load(spark, dir, "orders")
       o.agg(min(to_date(col("o_orderdate"))).as("lo"),
           max(to_date(col("o_orderdate"))).as("hi"))
@@ -277,7 +269,6 @@ object JoinQueries {
   val qJoinBucketed = Q(
     "q_join_bucketed",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val o = load(spark, dir, "orders")
       val c = load(spark, dir, "customer")
       // a prior SESSION's managed-table dir survives while the
@@ -324,7 +315,6 @@ object JoinQueries {
   val qJoinFullOuter = Q(
     "q_join_full_outer",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val neg = load(spark, dir, "customer")
         .filter(col("c_acctbal") < 0)
         .groupBy(col("c_custkey"))
@@ -371,7 +361,6 @@ object JoinQueries {
   val qJoinDpp = Q(
     "q_join_dpp",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       load(spark, dir, "orders")
         .withColumn("o_year", year(col("o_orderdate")))
         .write.mode("overwrite").partitionBy("o_year").parquet(dppPath)

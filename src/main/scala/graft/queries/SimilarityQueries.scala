@@ -44,7 +44,6 @@ object SimilarityQueries {
   val qFuzzyJaro = Q(
     "q_fuzzy_jaro",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val p = load(spark, dir, "part")
       val k = col("p_partkey")
       val dim = p.select(lower(trim(col("p_name"))).as("dim_name")).distinct()
@@ -114,7 +113,6 @@ object SimilarityQueries {
   val qSimjoinPrefix = Q(
     "q_simjoin_prefix",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       // spread the single-row-group fixture before row-local tokenize;
       // tokens travel as 8-byte stringHash values from the native
       // graft_shingle_hashes kernel (the jaccard-family convention —

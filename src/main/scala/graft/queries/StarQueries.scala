@@ -100,7 +100,6 @@ object StarQueries {
   }
 
   private def fact(spark: SparkSession, dir: String): DataFrame = {
-    Tables.ensureConf(spark) // callers declare Q.LegacyTime
     // persist the keyed stage and dim_vehicle, as Etl2.run does: the
     // dimensions, resolution and fact assembly consume the stage
     // lineage ~6x (three dims, the resolution's observation window,
@@ -294,7 +293,6 @@ object StarQueries {
   val qStarDimVehicle = Q(
     "q_star_dim_vehicle",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       // dims need only the keyed stage — skip the resolution cascade
       // and fact assembly fact() would also build
       val (dv, _, _) = Etl2.dimensions(Etl2.keyed(Etl1.stage(rawSynth(spark, dir))))

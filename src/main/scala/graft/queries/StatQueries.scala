@@ -33,7 +33,6 @@ object StatQueries {
   val qGroupingSets = Q(
     "q_grouping_sets",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       load(spark, dir, "orders")
         .groupingSets(
           Seq(Seq(col("o_orderstatus"), col("o_orderpriority")),
@@ -63,7 +62,6 @@ object StatQueries {
   val qUnpivot = Q(
     "q_unpivot",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val wide = load(spark, dir, "orders")
         .groupBy(trunc(col("o_orderdate"), "month").as("month"))
         .agg(
@@ -101,7 +99,6 @@ object StatQueries {
   val qQuantileBins = Q(
     "q_quantile_bins",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val base = load(spark, dir, "orders")
         .select(col("o_orderkey"), cents("o_totalprice").as("c"))
       val parts = spark.sparkContext.defaultParallelism
@@ -133,7 +130,6 @@ object StatQueries {
   val qHistogram = Q(
     "q_histogram",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       load(spark, dir, "documents")
         .select(col("lang"),
           least(floor(col("n_chars") / 100), lit(9L)).cast("int").as("bucket"),
@@ -162,7 +158,6 @@ object StatQueries {
   val qKAnonymity = Q(
     "q_k_anonymity",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val groups = load(spark, dir, "customer")
         .select(col("c_nationkey"), col("c_mktsegment"),
           floor(col("c_acctbal") / 1000).cast("long").as("bal_band"))
@@ -194,7 +189,6 @@ object StatQueries {
   val qTableProfile = Q(
     "q_table_profile",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val o = load(spark, dir, "orders")
         .withColumn("o_custkey",
           when(pmod(col("o_orderkey"), lit(89)) === 0, lit(null))
@@ -266,7 +260,6 @@ object StatQueries {
   val qAnomalyMad = Q(
     "q_anomaly_mad",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val base = load(spark, dir, "orders").select(
         col("o_orderstatus").as("seg"),
         year(col("o_orderdate").cast("date")).as("yr"),
@@ -332,7 +325,6 @@ object StatQueries {
   val qChiSquare = Q(
     "q_chi_square",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val cells = load(spark, dir, "documents")
         .groupBy("lang", "source").agg(count(lit(1)).as("o"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -390,7 +382,6 @@ object StatQueries {
   val qWinsorize = Q(
     "q_winsorize",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val base = load(spark, dir, "orders").select(
         col("o_orderstatus").as("seg"),
         year(col("o_orderdate").cast("date")).as("yr"),
@@ -451,7 +442,6 @@ object StatQueries {
   val qAucEval = Q(
     "q_auc_eval",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val d = load(spark, dir, "documents").select(
         col("n_chars").as("score"),
         when(col("lang") === "en", 1L).otherwise(0L).as("pos"))

@@ -41,7 +41,6 @@ object StreamQueries {
   val qStreamBatchParity = Q(
     "q_stream_batch_parity",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val inDir = s"$parityRoot/in"
       val outDir = s"$parityRoot/out"
       val ckDir = s"$parityRoot/ck"
@@ -129,7 +128,6 @@ object StreamQueries {
   val qStreamScd2Parity = Q(
     "q_stream_scd2_parity",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val inDir = s"$scd2Root/in"
       val ckDir = s"$scd2Root/ck"
       val fs = new Path(scd2Root)
@@ -199,7 +197,6 @@ object StreamQueries {
   val qStreamWatermarkDedup = Q(
     "q_stream_watermark_dedup",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val inDir = s"$wmRoot/in"
       val outDir = s"$wmRoot/out"
       val ckDir = s"$wmRoot/ck"
@@ -269,7 +266,6 @@ object StreamQueries {
   val qStreamStreamJoin = Q(
     "q_stream_stream_join",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val fs = new Path(ssjRoot)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(new Path(ssjRoot), true)
@@ -408,7 +404,6 @@ object StreamQueries {
   val qStreamSessionParity = Q(
     "q_stream_session_parity",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       import spark.implicits._
       val inDir = s"$sessRoot/in"
       val outDir = s"$sessRoot/out"
@@ -494,7 +489,6 @@ object StreamQueries {
   val qStreamWindowParity = Q(
     "q_stream_window_parity",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       import spark.implicits._
       val inDir = s"$winRoot/in"
       val outDir = s"$winRoot/out"

@@ -57,7 +57,6 @@ object TextQueries {
   val qTextTokens = Q(
     "q_text_tokens",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       // repartition: same single-scan-split spread as q_dedup_ngram_jaccard
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
       val w = words(col("text"))
@@ -80,7 +79,6 @@ object TextQueries {
   val qTextQuality = Q(
     "q_text_quality",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       // repartition: same single-scan-split spread as q_dedup_ngram_jaccard
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
       val w = words(col("text"))
@@ -108,7 +106,6 @@ object TextQueries {
   val qTextLangid = Q(
     "q_text_langid",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       // repartition: same single-scan-split spread as q_dedup_ngram_jaccard
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
       val scores = langScores(col("text"), words(col("text")))
@@ -142,7 +139,6 @@ object TextQueries {
   val qTextFingerprint = Q(
     "q_text_fingerprint",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       // repartition: same single-scan-split spread as q_dedup_ngram_jaccard
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
       // the native kernel's distinct-hash array gives both outputs:
@@ -181,7 +177,6 @@ object TextQueries {
   val qDedupExact = Q(
     "q_dedup_exact",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val d = load(spark, dir, "documents")
       val w = words(col("text"))
       d.select(col("doc_id"), md5(concat_ws(" ", slice(w, 1, 5))).as("prefix_fp"))
@@ -345,7 +340,6 @@ object TextQueries {
   val qDedupNgramJaccard = Q(
     "q_dedup_ngram_jaccard",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       ngramJaccardPairs(spark, dir)
     },
     Some(s"""WITH $sqlJaccardPairCtes
@@ -366,7 +360,6 @@ object TextQueries {
   private def minhashLshDf(bands: Int, rows: Int)(
       spark: org.apache.spark.sql.SparkSession, dir: String) = {
     require(bands * rows <= 8, s"signature width is 8, need bands*rows <= 8")
-    Tables.ensureConf(spark)
     // repartition: same single-scan-split spread as q_dedup_ngram_jaccard
     val d = load(spark, dir, "documents").repartition(col("doc_id"))
     // persisted ONCE with the shingle sets; self-joined below, and
@@ -486,7 +479,6 @@ object TextQueries {
   val qDedupSimhash = Q(
     "q_dedup_simhash",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       // repartition: same single-scan-split spread as q_dedup_ngram_jaccard
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
       // Signature via the native row-local kernel (one codegen'd loop
@@ -615,7 +607,6 @@ object TextQueries {
   val qMinhashSketch = Q(
     "q_minhash_sketch",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val mh = udaf(graft.functions.MinHashAgg)
       val d = load(spark, dir, "documents")
       d.select(col("doc_id"),
@@ -650,7 +641,6 @@ object TextQueries {
   val qCorpusPipeline = Q(
     "q_corpus_pipeline",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       // repartition: same single-scan-split spread as q_dedup_ngram_jaccard
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
       val w = words(col("text"))
@@ -716,7 +706,6 @@ object TextQueries {
   val qSampleStratified = Q(
     "q_sample_stratified",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val d = load(spark, dir, "documents")
       val bucket = sampleBucket(col("doc_id"), "smpl:", 10000L)
       val rate = when(col("lang") === "en", lit(2000L)).otherwise(lit(6000L))
@@ -755,7 +744,6 @@ object TextQueries {
   val qSampleWeighted = Q(
     "q_sample_weighted",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val d = load(spark, dir, "documents")
       val h = pmod(conv(substring(md5(concat(lit("wsmpl:"),
         col("doc_id").cast("string"))), 1, 15), 16, 10).cast("long"),
@@ -796,7 +784,6 @@ object TextQueries {
   val qPiiScrub = Q(
     "q_pii_scrub",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
       val emailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
       val phoneRe = "\\+[0-9]{1,2}-[0-9]{3}-[0-9]{4}"
@@ -845,7 +832,6 @@ object TextQueries {
   val qChunkOverlap = Q(
     "q_chunk_overlap",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val K = 50
       val stride = 40 // overlap 10
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
@@ -888,7 +874,6 @@ object TextQueries {
   val qDecontaminate = Q(
     "q_decontaminate",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       // repartition: same single-scan-split spread as q_dedup_ngram_jaccard
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
       // persist: pushdown barrier for the shingle derivation (see
@@ -941,7 +926,6 @@ object TextQueries {
   val qTextRepetition = Q(
     "q_text_repetition",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       // repartition: same single-scan-split spread as q_dedup_ngram_jaccard
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
       val w = d.select(col("doc_id"), explode(words(col("text"))).as("w"))
@@ -983,7 +967,6 @@ object TextQueries {
   val qChunkPack = Q(
     "q_chunk_pack",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val d = load(spark, dir, "documents")
       val t = d.select(col("doc_id"), col("source"),
         bpeishTokenCount(col("text")).cast("long").as("n_tok"))
@@ -1012,7 +995,6 @@ object TextQueries {
   val qBpePairs = Q(
     "q_bpe_pairs",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val d = load(spark, dir, "documents")
       val vocab = d.select(explode(words(col("text"))).as("word"))
         .filter(length(col("word")) >= 2)
@@ -1053,7 +1035,6 @@ object TextQueries {
   val qDedupComponents = Q(
     "q_dedup_components",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val pairs = ngramJaccardPairs(spark, dir)
         .select(col("doc_a").as("u"), col("doc_b").as("v"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1085,7 +1066,6 @@ object TextQueries {
   val qDedupApply = Q(
     "q_dedup_apply",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val pairs = ngramJaccardPairs(spark, dir)
         .select(col("doc_a").as("u"), col("doc_b").as("v"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1137,7 +1117,6 @@ object TextQueries {
   val qBloomPrefilter = Q(
     "q_bloom_prefilter",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val d = load(spark, dir, "documents")
       val f = d.select(col("doc_id"),
         md5(concat_ws(" ", slice(words(col("text")), 1, 5))).as("fp"))
@@ -1174,7 +1153,6 @@ object TextQueries {
   val qBloomSharded = Q(
     "q_bloom_sharded",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val d = load(spark, dir, "documents")
       val f = d.select(col("doc_id"),
         md5(concat_ws(" ", slice(words(col("text")), 1, 5))).as("fp"))
@@ -1220,7 +1198,6 @@ object TextQueries {
   val qGopherFilter = Q(
     "q_gopher_filter",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
       val w = words(col("text"))
       val nW = size(w).cast("long")
@@ -1293,7 +1270,6 @@ object TextQueries {
   val qMixtureSample = Q(
     "q_mixture_sample",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
       val tok = d.select(col("doc_id"), col("source"),
         size(words(col("text"))).cast("long").as("n_tok"))
@@ -1342,7 +1318,6 @@ object TextQueries {
   val qTfidfTerms = Q(
     "q_tfidf_terms",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
       val tf = d.select(col("doc_id"), explode(words(col("text"))).as("term"))
         .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -1399,7 +1374,6 @@ object TextQueries {
   val qLineDedup = Q(
     "q_line_dedup",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
       val seeded = d.select(col("doc_id"),
         concat(col("text"),
@@ -1469,7 +1443,6 @@ object TextQueries {
   val qBm25Rank = Q(
     "q_bm25_rank",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
       val toks = d.select(col("doc_id"), explode(words(col("text"))).as("term"))
       val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -1538,7 +1511,6 @@ object TextQueries {
   val qDedupSubstring = Q(
     "q_dedup_substring",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val K = 32
       val banner = "== standard disclaimer: provided as-is without " +
         "warranty of any kind; redistribution permitted =="
@@ -1617,7 +1589,6 @@ object TextQueries {
   val qBpeLearn = Q(
     "q_bpe_learn",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       import spark.implicits._
       val vocab0 = load(spark, dir, "documents")
         .select(explode(words(col("text"))).as("word"))
@@ -1722,7 +1693,6 @@ object TextQueries {
   val qBpeEncode = Q(
     "q_bpe_encode",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       var cur = load(spark, dir, "documents")
         .select(explode(words(col("text"))).as("word"))
         .filter(length(col("word")) > 0)
@@ -1846,7 +1816,6 @@ object TextQueries {
   val qLmPerplexity = Q(
     "q_lm_perplexity",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
         .select(col("doc_id"), words(col("text")).as("w"))
         .filter(size(col("w")) >= 2)
@@ -1925,7 +1894,6 @@ object TextQueries {
   val qTextNormalize = Q(
     "q_text_normalize",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val seeded = load(spark, dir, "documents").repartition(col("doc_id"))
         .select(col("doc_id"),
           when(col("doc_id") % 5 === 0,
@@ -1975,7 +1943,6 @@ object TextQueries {
   val qDedupContainment = Q(
     "q_dedup_containment",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val DfCap = 1000
       val d0 = load(spark, dir, "documents").repartition(col("doc_id"))
         .select(col("doc_id"), col("text"))
@@ -2115,7 +2082,6 @@ object TextQueries {
   val qCollocations = Q(
     "q_collocations",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       // project the words array BEFORE the index explode: inside a
       // transform lambda every element_at(words(text), i) re-inlines
       // the full split per element (the round-1 nested-expression
@@ -2175,7 +2141,6 @@ object TextQueries {
   val qFeatureHash = Q(
     "q_feature_hash",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
         .select(col("doc_id"), explode(words(col("text"))).as("word"))
         .withColumn("h", conv(substring(md5(col("word")), 1, 15), 16, 10).cast("long"))
@@ -2212,7 +2177,6 @@ object TextQueries {
   val qTextEntropy = Q(
     "q_text_entropy",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
         .select(col("doc_id"), explode(words(col("text"))).as("word"))
       val c = d.groupBy("doc_id", "word").agg(count(lit(1)).as("c"))
@@ -2262,7 +2226,6 @@ object TextQueries {
   val qSentenceSplit = Q(
     "q_sentence_split",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
       val punct = d
         .select(col("doc_id"), words(col("text")).as("w"))
@@ -2316,7 +2279,6 @@ object TextQueries {
   val qSamplingTemperature = Q(
     "q_sampling_temperature",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val src = load(spark, dir, "documents")
         .groupBy("source").agg(count(lit(1)).as("n_docs"))
         .withColumn("s_e6", round(lit(1e6) * sqrt(col("n_docs"))).cast("long"))
@@ -2352,7 +2314,6 @@ object TextQueries {
   val qNgramNovelty = Q(
     "q_ngram_novelty",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
       // native kernel = distinct shingles, '' dropped pre-hash, then
       // stringHash — exactly the composed explode(array_distinct(
@@ -2403,7 +2364,6 @@ object TextQueries {
   val qTokenizerFertility = Q(
     "q_tokenizer_fertility",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
       d.select(col("lang"),
         bpeishTokenCount(col("text")).cast("long").as("tok"),
@@ -2463,7 +2423,6 @@ object TextQueries {
     Q(
     name,
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val d = load(spark, dir, "documents").repartition(col("doc_id"))
       val base = d.select(col("doc_id"),
         shingleHashes(words(col("text"))).as("hs"))

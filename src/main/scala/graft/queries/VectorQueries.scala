@@ -105,7 +105,6 @@ object VectorQueries {
   val qAnnCosineTopk = Q(
     "q_ann_cosine_topk",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       exactTopkFrom(
         withNormalizedNative(load(spark, dir, "embeddings"), "embedding", "vn"))
     },
@@ -126,7 +125,6 @@ object VectorQueries {
   val qAnnLshBuckets = Q(
     "q_ann_lsh_buckets",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val e = load(spark, dir, "embeddings")
         // unrolled cast (codegen'd): `transform` runs interpreted per
         // element; float→double widening is exact either way
@@ -164,7 +162,6 @@ object VectorQueries {
   val qDedupEmbCosine = Q(
     "q_dedup_emb_cosine",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val emb = load(spark, dir, "embeddings")
       // bounded driver action: ONE scalar (the corpus size) picks the
       // plane count; memoized per dir, so repeated builds skip the job
@@ -199,7 +196,6 @@ object VectorQueries {
   val qAnnIvfTopk = Q(
     "q_ann_ivf_topk",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val emb = load(spark, dir, "embeddings")
       val planes = adaptivePlanes(corpusSize(spark, dir))
       val e = withNormalizedNative(emb, "embedding", "vn")
@@ -285,7 +281,6 @@ object VectorQueries {
   val qKmeansLloyd = Q(
     "q_kmeans_lloyd",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val e = withNormalizedNative(load(spark, dir, "embeddings"), "embedding", "vn")
         .select(col("vec_id"),
           graft.ops.KMeans.quantize1000(col("vn")).as("vq"))
@@ -309,7 +304,6 @@ object VectorQueries {
   val qVecQuantize = Q(
     "q_vec_quantize",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       // native graft_quantize kernel: the unrolled-built-ins form of
       // this math is a 192-term projection whose generated method blows
       // HotSpot's JIT size limit and runs interpreted (~120 µs/row
@@ -413,7 +407,6 @@ object VectorQueries {
   val qAnnPqEncode = Q(
     "q_ann_pq_encode",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val base = withNormalizedNative(load(spark, dir, "embeddings"), "embedding", "vn")
         .select(col("vec_id"),
           graft.ops.KMeans.quantize1000(col("vn")).as("vq"))
@@ -536,7 +529,6 @@ object VectorQueries {
   val qAnnPqAdc = Q(
     "q_ann_pq_adc",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       pqAdcTopk(spark, dir)
     },
     Some {
@@ -597,7 +589,6 @@ object VectorQueries {
   val qSemanticDedup = Q(
     "q_semantic_dedup",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val e = withNormalizedNative(load(spark, dir, "embeddings"), "embedding", "vn")
         .select(col("vec_id"), col("vn"))
         .withColumn("vq", graft.ops.KMeans.quantize1000(col("vn")))
@@ -647,7 +638,6 @@ object VectorQueries {
   val qRrfHybrid = Q(
     "q_rrf_hybrid",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       import graft.ops.TextOps.words
       val DfCap = 50
       val TopN = 20
@@ -807,7 +797,6 @@ object VectorQueries {
   val qKnnGraph = Q(
     "q_knn_graph",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       knnEdges(spark, dir)
     },
     Some(s"""WITH $knnSqlCtes
@@ -836,7 +825,6 @@ object VectorQueries {
   val qSemanticClusters = Q(
     "q_semantic_clusters",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val edges = knnEdges(spark, dir)
         .select(col("vec_a").as("u"), col("vec_b").as("v"))
       // escalateAfter=0: straight to the large-star/small-star phase.
@@ -924,7 +912,6 @@ object VectorQueries {
     Q(
       "q_covariance_matrix",
       (spark, dir) => {
-        Tables.ensureConf(spark)
         val dec = org.apache.spark.sql.types.DecimalType(38, 0)
         val e = load(spark, dir, "embeddings")
         val xs = e.select((0 until D).map(i =>
@@ -984,7 +971,6 @@ object VectorQueries {
     Q(
       "q_random_projection",
       (spark, dir) => {
-        Tables.ensureConf(spark)
         val e = load(spark, dir, "embeddings")
         val xs = e.select(col("vec_id") +: (0 until InD).map(i =>
           round(element_at(col("embedding"), i + 1).cast("double") * 1e6)
@@ -1017,7 +1003,6 @@ object VectorQueries {
   val qLabelPropagation = Q(
     "q_label_propagation",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       import org.apache.spark.sql.expressions.Window
       val em = load(spark, dir, "embeddings")
       val seeds = em.filter(pmod(col("vec_id"), lit(20)) === 0)
@@ -1097,7 +1082,6 @@ object VectorQueries {
   private def annRecallQ(name: String, exact: Q, approx: Q, doc: String): Q = Q(
     name,
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val ex = exact.build(spark, dir).select(col("q_id"), col("neighbor_id"))
         .withColumn("__e", lit(1))
       val ap = approx.build(spark, dir).select(col("q_id"), col("neighbor_id"))
@@ -1302,7 +1286,6 @@ object VectorQueries {
   val qAnnIvfTrained = Q(
     "q_ann_ivf_trained",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val w = Window.partitionBy(col("q_id"))
         .orderBy(col("cos").desc, col("vec_id").asc)
       ivfTrainedChain(spark, dir)._1
@@ -1325,7 +1308,6 @@ object VectorQueries {
   val qAnnIvfTrainedRecall = Q(
     "q_ann_ivf_trained_recall",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val (cand, prep) = ivfTrainedChain(spark, dir)
       val w = Window.partitionBy(col("q_id"))
         .orderBy(col("cos").desc, col("vec_id").asc)
@@ -1503,7 +1485,6 @@ object VectorQueries {
   val qAnnIvfPqTopk = Q(
     "q_ann_ivfpq_topk",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val w = Window.partitionBy(col("q_id"))
         .orderBy(col("cos").desc, col("vec_id").asc)
       val (ranked, prep) = ivfPqChain(spark, dir)
@@ -1529,7 +1510,6 @@ object VectorQueries {
   val qAnnIvfPqRecall = Q(
     "q_ann_ivfpq_recall",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val (ranked, prep) = ivfPqChain(spark, dir)
       val rr = ivfPqReranked(spark, dir, ranked, prep)
       val w = Window.partitionBy(col("q_id"))

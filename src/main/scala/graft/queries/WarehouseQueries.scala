@@ -41,7 +41,6 @@ object WarehouseQueries {
   val qHllRollup = Q(
     "q_hll_rollup",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val base = load(spark, dir, "orders")
         .select(trunc(col("o_orderdate"), "month").as("month"),
           to_date(col("o_orderdate")).as("day"), col("o_custkey"))
@@ -81,7 +80,6 @@ object WarehouseQueries {
   val qIncrAgg = Q(
     "q_incr_agg",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val cut = lit("1998-06-15 00:00:00").cast("timestamp")
       def agg(df: org.apache.spark.sql.DataFrame) = df
         .select(trunc(col("o_orderdate"), "month").as("month"),
@@ -123,7 +121,6 @@ object WarehouseQueries {
   val qDqAudit = Q(
     "q_dq_audit",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val o = load(spark, dir, "orders")
         .withColumn("o_custkey",
           when(pmod(col("o_orderkey"), lit(991)) === 0, lit(null))
@@ -214,7 +211,6 @@ object WarehouseQueries {
   val qSchemaEvolution = Q(
     "q_schema_evolution",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val orders = load(spark, dir, "orders")
       orders.filter(year(col("o_orderdate")) < 1998)
         .select(col("o_orderkey"), cents("o_totalprice").as("price_cents"))
@@ -306,7 +302,6 @@ object WarehouseQueries {
   val qSnapshotDiff = Q(
     "q_snapshot_diff",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       snapshotChanges(spark, dir).select("o_orderkey", "change_type")
     },
     Some("""WITH old AS (
@@ -361,7 +356,6 @@ object WarehouseQueries {
   val qCdcApply = Q(
     "q_cdc_apply",
     (spark, dir) => {
-      Tables.ensureConf(spark)
       val old = oldSnapshot(spark, dir)
       val changes = snapshotChanges(spark, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -23,14 +23,12 @@ class AqeSpec extends SparkSpec {
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      // ensureConf (any registry query on this shared session) sets the
+      // Q.Base (which the suite session carries) sets the
       // ADAPTIVE threshold to 64m; without disabling it too, AQE
       // converts the SMJ to broadcast at runtime and the skew-split
       // machinery under test never engages
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    Tables.withConf(spark, confs: _*) {
       // 90% of left rows share key 0; right is uniform
       val left = (1L to 40000L)
         .map(i => (if (i % 10 == 0) i % 100 else 0L, s"pad_left_$i"))
@@ -48,9 +46,6 @@ class AqeSpec extends SparkSpec {
         "AQE did not mark the join skewed:\n" + plan)
       assert(plan.contains("AQEShuffleRead skewed"),
         "skewed partition was not split:\n" + plan)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -35,8 +35,7 @@ class BucketingSpec extends SparkSpec {
         .bucketBy(8, "k").sortBy("k").saveAsTable("t_right")
 
       // force the shuffle-join path: broadcast would hide the exchange
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
+      Tables.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val l = spark.table("t_left")
         val r = spark.table("t_right")
         val joined = l.join(r, Seq("k"))
@@ -50,7 +49,7 @@ class BucketingSpec extends SparkSpec {
         val plain = spark.read.parquet(s"$wh/plain_left")
           .join(spark.read.parquet(s"$wh/plain_right"), Seq("k"))
         assert(shuffles(plain) == 2, "control join should shuffle both sides")
-      } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      }
     } finally {
       spark.sql("DROP TABLE IF EXISTS t_left")
       spark.sql("DROP TABLE IF EXISTS t_right")

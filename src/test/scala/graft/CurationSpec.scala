@@ -219,7 +219,6 @@ class CurationSpec extends SparkSpec {
     // (measured via the dev probe: 1500/1500 rows read with disjoint
     // envelopes), while the identical DATE range prunes — which is why
     // q_range_layout derives o_date before writing
-    Tables.ensureConf(spark)
     val o = Tables.load(spark, dir, "orders")
       .withColumn("o_date", to_date(col("o_orderdate")))
     val clustered = "/tmp/graft_layout_clustered"

@@ -77,14 +77,8 @@ class DedupGuardSpec extends SparkSpec {
       s"$queryName: missing star edges: ${(star -- intra.toSet).take(5)}")
   }
 
-  private def withCap[A](n: Int)(f: => A): A = {
-    val prev = spark.conf.getOption(graft.ops.ClassGuard.ConfKey)
-    spark.conf.set(graft.ops.ClassGuard.ConfKey, n.toString)
-    try f finally prev match {
-      case Some(v) => spark.conf.set(graft.ops.ClassGuard.ConfKey, v)
-      case None => spark.conf.unset(graft.ops.ClassGuard.ConfKey)
-    }
-  }
+  private def withCap[A](n: Int)(f: => A): A =
+    Tables.withConf(spark, graft.ops.ClassGuard.ConfKey -> n.toString)(f)
 
   private def pairsOf(df: org.apache.spark.sql.DataFrame,
       a: String, b: String): Seq[(Long, Long)] =

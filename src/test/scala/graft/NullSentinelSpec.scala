@@ -15,7 +15,7 @@ import org.apache.spark.sql.Row
   * query relying on a sentinel) fails here rather than in the driver's
   * oracle compare:
   *
-  *  - size(NULL): legacy -1 is DISABLED in Tables.ensureConf
+  *  - size(NULL): legacy -1 is DISABLED in Q.Base
   *    (spark.sql.legacy.sizeOfNull=false) → NULL, matching DuckDB.
   *  - element_at / getItem out of bounds: NULL with ANSI off, matching
   *    DuckDB list indexing — safe, pinned.
@@ -30,8 +30,7 @@ import org.apache.spark.sql.Row
   */
 class NullSentinelSpec extends SparkSpec {
 
-  test("ensureConf disables the legacy size(NULL) = -1 sentinel") {
-    Tables.ensureConf(spark)
+  test("Q.Base disables the legacy size(NULL) = -1 sentinel") {
     assert(spark.conf.get("spark.sql.legacy.sizeOfNull") == "false")
     val df = spark.sql(
       "SELECT size(CAST(NULL AS ARRAY<STRING>)) AS n, size(array('a')) AS one")
@@ -41,7 +40,6 @@ class NullSentinelSpec extends SparkSpec {
   }
 
   test("q_jsonl_scan missing-tags row yields NULL n_tags (the driver bug)") {
-    Tables.ensureConf(spark)
     val out = graft.queries.CoreQueries.qJsonlScan
       .build(spark, "unused")
       .filter(col("id") === 5)
@@ -54,7 +52,6 @@ class NullSentinelSpec extends SparkSpec {
   }
 
   test("element_at out-of-bounds is NULL with ANSI off (matches DuckDB)") {
-    Tables.ensureConf(spark)
     val r = spark.sql(
       "SELECT element_at(array('a','b'), 5) AS oob, " +
       "element_at(map('k','v'), 'missing') AS mk, " +
@@ -63,7 +60,6 @@ class NullSentinelSpec extends SparkSpec {
   }
 
   test("malformed-string cast is NULL (oracle side must TRY_CAST)") {
-    Tables.ensureConf(spark)
     val r = spark.sql(
       "SELECT CAST('12x' AS INT) AS bad, CAST('' AS DOUBLE) AS empty, " +
       "CAST('2024-99-99' AS DATE) AS baddate").collect().head
@@ -71,7 +67,6 @@ class NullSentinelSpec extends SparkSpec {
   }
 
   test("legacy integral overflow WRAPS — never narrow-cast oracle columns") {
-    Tables.ensureConf(spark)
     val r = spark.sql(
       "SELECT CAST(4294967296 AS INT) AS wraps").collect().head
     // With ANSI off this silently wraps to 0 — a sentinel-class hazard:
@@ -81,7 +76,6 @@ class NullSentinelSpec extends SparkSpec {
   }
 
   test("division by zero is NULL with ANSI off (oracle must NULLIF)") {
-    Tables.ensureConf(spark)
     val r = spark.sql(
       "SELECT 1 div 0 AS idiv, CAST(1 AS DOUBLE)/0 AS ddiv, 5 % 0 AS m")
       .collect().head

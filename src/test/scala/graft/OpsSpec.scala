@@ -24,8 +24,10 @@ class OpsSpec extends SparkSpec {
   }
 
   test("DateParse 2-digit years resolve under LEGACY policy") {
-    val got = Seq("01/02/15").toDF("raw")
-      .select(DateParse.parseMulti(col("raw")).cast("string")).first.getString(0)
+    val got = Tables.withConf(spark, Q.LegacyTime.toSeq: _*) {
+      Seq("01/02/15").toDF("raw")
+        .select(DateParse.parseMulti(col("raw")).cast("string")).first.getString(0)
+    }
     assert(got == "2015-02-01")
   }
 
@@ -133,10 +135,7 @@ class OpsSpec extends SparkSpec {
     // Lower the session cap so a 20k-item history exceeds it (the same
     // conf Spark's BloomFilterAggregate clamps against), forcing the
     // fingerprint-prefix sharded path at test scale.
-    val capConf = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-    val old = spark.conf.getOption(capConf)
-    spark.conf.set(capConf, "8192")
-    try {
+    Tables.withConf(spark, "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" -> "8192") {
       val hist = spark.range(20000)
         .select(concat(lit("h"), col("id")).as("fp"), col("id").as("canonical"))
         .persist()
@@ -159,11 +158,6 @@ class OpsSpec extends SparkSpec {
         .filter(col("fp").startsWith("x")).count()
       assert(fpSurvivors < 300L, s"FPP degraded: $fpSurvivors/10000 false positives")
       hist.unpersist()
-    } finally {
-      old match {
-        case Some(v) => spark.conf.set(capConf, v)
-        case None => spark.conf.unset(capConf)
-      }
     }
   }
 

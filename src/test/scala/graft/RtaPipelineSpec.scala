@@ -29,18 +29,20 @@ class RtaPipelineSpec extends SparkSpec {
   )
 
   private val policy = "spark.sql.legacy.timeParserPolicy"
+  private val ansi = "spark.sql.ansi.enabled"
 
-  /** Output root, and the caller's timeParserPolicy after the two jobs
-    * (preset to CORRECTED for them; the suite session runs LEGACY). */
-  private lazy val (dirs, policyAfterRuns) = {
+  /** Output root, and the caller's timeParserPolicy and ANSI flag after
+    * the two jobs (preset to CORRECTED and ANSI on for them, as on a
+    * default Spark session; the jobs scope their own conf). */
+  private lazy val (dirs, policyAfterRuns, ansiAfterRuns) = {
     val root = java.nio.file.Files.createTempDirectory("graft-e2e").toString
     val csv = s"$root/raw.csv"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(csv),
       (header +: rows).mkString("\n"))
-    Tables.withConf(spark, policy -> "CORRECTED") {
+    Tables.withConf(spark, policy -> "CORRECTED", ansi -> "true") {
       Etl1.run(spark, csv, s"$root/stage")
       Etl2.run(spark, s"$root/stage", s"$root/gold")
-      (root, spark.conf.get(policy))
+      (root, spark.conf.get(policy), spark.conf.get(ansi))
     }
   }
 
@@ -56,6 +58,8 @@ class RtaPipelineSpec extends SparkSpec {
     assert(tr1.head.getAs[Int]("slno") == 2)
     assert(policyAfterRuns == "CORRECTED",
       "Etl1.run/Etl2.run must leave the caller's timeParserPolicy as they found it")
+    assert(ansiAfterRuns == "true",
+      "Etl1.run/Etl2.run must leave the caller's ANSI flag as they found it")
   }
 
   test("stage: validity gate drops repaired-misaligned and junk dates") {

@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 
 /** One implementation per rule: each guarded construct may appear in
   * one main source file only. Session conf changes go through
-  * `Q.conf` or `Tables.withConf`; the fuzzy match is
+  * `Q.conf` or `Tables.withConf`, and the base conf is applied where a
+  * session is set up, not per build; the fuzzy match is
   * `Resolution.resolve`; the office pattern and the date shapes are
   * `Repair` and `DateParse` in `CoreOps.scala`. The Scala-code
   * patterns do not match the single-quoted oracle SQL. */
@@ -17,7 +18,8 @@ class SourceGuardSpec extends AnyFunSuite {
     ("conf.set( / conf.unset(", """conf\.(set|unset)\(""", "Tables.scala"),
     literal("levenshtein(col(", "Resolution.scala"),
     literal("\"(?i)^(RTA", "CoreOps.scala"),
-    literal("""rlike("^\\d{2}/""", "CoreOps.scala"))
+    literal("""rlike("^\\d{2}/""", "CoreOps.scala"),
+    literal("ensureConf(", "Tables.scala"))
 
   private def literal(text: String, home: String) = (text, Pattern.quote(text), home)
 

@@ -12,10 +12,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = Harness.session(4)
-    s.conf.set("spark.sql.legacy.timeParserPolicy", "LEGACY")
-    graft.functions.GraftExtensions.register(s)
-    s
-  }
+  /** The production session, with nothing on top: a case that needs
+    * more conf scopes it with `Tables.withConf`. */
+  lazy val session: SparkSession = Harness.session(4)
 }

@@ -115,7 +115,6 @@ class TextVectorSpec extends SparkSpec {
   }
 
   test("bucketedPairsCosineAtLeast ⊆ all-pairs, identical cos_bp values") {
-    Tables.ensureConf(spark)
     val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val n = VectorOps.withNormalizedNative(e, "embedding", "vn")
       .select(col("vec_id"), col("vn"))
@@ -135,7 +134,6 @@ class TextVectorSpec extends SparkSpec {
   }
 
   test("q_semantic_dedup is SOUND: every removal is a real ≥τ pair, canonical < removed") {
-    Tables.ensureConf(spark)
     val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val n = VectorOps.withNormalizedNative(e, "embedding", "vn")
       .select(col("vec_id"), col("vn"))
