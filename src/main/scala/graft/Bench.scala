@@ -81,8 +81,6 @@ object Bench {
       ctx.updateLoggers()
     }
 
-    def clearState(): Unit = Harness.clearState(spark)
-
     // Fixed-work CPU probe: the host has documented steal stalls, and a
     // single graded bench run can land in one. The probe times an
     // identical single-thread workload at start and end; a quiet host
@@ -240,7 +238,7 @@ object Bench {
     Seq("q1_pricing_summary", "q_counts").filter(SparkEntry.queries.contains)
       .foreach { n =>
         try runFully(n) catch { case _: Throwable => () }
-        clearState()
+        Harness.clearState()
       }
 
     // ---- main loop: warmup + adaptive pass count per query ----
@@ -272,14 +270,14 @@ object Bench {
       else {
         if (p >= 3) { // untimed warmup: JIT/codegen + footer caches
           try runFully(name) catch { case _: Throwable => () }
-          clearState()
+          Harness.clearState()
         } else coldOnly += name // 1-pass mode: the cold run IS the number
         val ts = (1 to p).map { _ =>
           val s0 = System.nanoTime()
           val ok = try { runFully(name); true }
             catch { case _: Throwable => failed += name; false }
           val dt = (System.nanoTime() - s0) / 1e9
-          clearState()
+          Harness.clearState()
           if (ok) dt else -1.0
         }.sorted
         results(name) = ts
@@ -305,7 +303,7 @@ object Bench {
             val ok = try { runFully(name); true }
               catch { case _: Throwable => failed += name; false }
             val dt = (System.nanoTime() - s0) / 1e9
-            clearState()
+            Harness.clearState()
             if (ok) dt else -1.0
           }.sorted
           if (ts2.head >= 0 && medOf(ts2) < medOf(ts)) results(name) = ts2

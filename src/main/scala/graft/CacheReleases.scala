@@ -1,32 +1,56 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
-/** Registry for frames a query builder persists but cannot unpersist
-  * itself because the RETURNED lazy plan still reads them (guide §5:
-  * unpersist when done — but "done" is after the caller's terminal
-  * action, outside the builder). [[Harness.clearState]] drains it
-  * between queries; this queue gives LIBRARY callers the same release
-  * point, so a long-lived session embedding these builders does not
-  * leak one cached corpus per call (round-14, VERDICT r13 item 8).
+/** The cache policy, and the only two ways `src/main` caches a frame.
   *
-  * The queue is process-wide, not per query: [[releaseAll]] also
-  * unpersists frames registered by OTHER builders whose plans have not
-  * run their terminal action yet. Those plans still return the same
-  * rows; they recompute the released input instead of reading the
-  * cache. Call it once the session's pending actions are done. */
+  * A builder that reuses a frame across several actions, or whose
+  * RETURNED lazy plan reads it, caches it through [[persisted]] or
+  * [[checkpointed]]. Both register the frame for release in the same
+  * step. Every persisted frame gets one storage level (the level
+  * `Dataset.cache()` means), and there is no cross-query cache: a frame
+  * lives for one query's chain. The release point is [[releaseAll]],
+  * after the caller's terminal action; [[Harness.clearState]] is that
+  * call and nothing more. A builder may still unpersist a frame itself
+  * once its own actions are done; the later release is then a no-op.
+  *
+  * The queue is process-wide, not per query or per session, and an
+  * early release is not always harmless. A persisted frame released
+  * before a pending plan runs is recomputed from its lineage, at the
+  * cost of that recomputation. A local checkpoint released before a
+  * pending plan runs makes that plan fail, because a checkpoint has no
+  * lineage to recompute from. So call [[releaseAll]] only once every
+  * pending action in the process is done. */
 object CacheReleases {
   private val queue =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+    new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
 
-  /** Register a persisted frame for later release; returns it. */
-  def register(df: DataFrame): DataFrame = { queue.add(df); df }
+  private def register(release: () => Unit): Unit = queue.add(release)
 
-  /** Unpersist every registered frame (blocking=false). Safe to call
-    * any time after the terminal action on the frames' consumers. */
+  /** `df` persisted at the policy's storage level, registered for
+    * release. */
+  def persisted(df: DataFrame): DataFrame = {
+    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+    register(() => p.unpersist(false))
+    p
+  }
+
+  /** `df.localCheckpoint(eager)`, with the checkpoint RDD (the one
+    * under the result's [[LogicalRDD]]) registered for release. */
+  def checkpointed(df: DataFrame, eager: Boolean): DataFrame = {
+    val c = df.localCheckpoint(eager)
+    val rdd = c.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+    register(() => rdd.unpersist(false))
+    c
+  }
+
+  /** Release every registered frame (blocking=false). Safe to call
+    * once the terminal actions on the frames' consumers are done. */
   def releaseAll(): Unit = {
-    var df = queue.poll()
-    while (df != null) { df.unpersist(false); df = queue.poll() }
+    var release = queue.poll()
+    while (release != null) { release(); release = queue.poll() }
   }
 
   /** True when no registered frame awaits release. */

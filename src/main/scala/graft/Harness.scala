@@ -10,10 +10,9 @@ object Harness {
   /** Local session on `cpus` threads (one shuffle partition per
     * thread), under [[Q.Base]] with the native functions registered,
     * AQE on, no UI; so a query without its own conf builds on it
-    * directly. Log level ERROR: [[clearState]]'s blanket unpersist of
-    * the lazy localCheckpoint RDDs (Components) emits thousands of
-    * harmless "cannot be recomputed after unpersisting" WARN lines per
-    * run. */
+    * directly. Log level ERROR: each released local checkpoint (the
+    * Components rounds, the SCD2 fold) logs a harmless "cannot be
+    * recomputed after unpersisting" WARN line. */
   def session(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -27,16 +26,10 @@ object Harness {
     spark
   }
 
-  /** Drop every cached frame and persisted RDD, then drain the
-    * [[CacheReleases]] queue (its frames are already unpersisted by
-    * then; draining drops the references). Several dedup/resolution
-    * builders persist their self-joined input, and one query's cache
-    * must not GC-pressure the next. */
-  def clearState(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    CacheReleases.releaseAll()
-  }
+  /** Release every frame the last query cached: every builder caches
+    * through [[CacheReleases]], so one query's cache cannot
+    * GC-pressure the next. */
+  def clearState(): Unit = CacheReleases.releaseAll()
 
   /** Execute the registered query's FULL plan and discard the rows:
     * count() would let the optimizer prune every projection it does

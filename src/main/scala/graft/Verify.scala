@@ -17,7 +17,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         Some(name -> String.valueOf(e.getMessage))
       }
-      Harness.clearState(spark)
+      Harness.clearState()
       failed
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -2,10 +2,10 @@ package graft.ops
 
 import scala.jdk.CollectionConverters._
 
+import graft.CacheReleases
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 /** Mega-class escape hatch for the class-collapse dedup family.
   *
@@ -101,12 +101,10 @@ object ClassGuard {
     * CONTRACT — cache lifetime: the internal aggregate stays persisted
     * for the life of the returned (lazy) plans — callers hand
     * `classes`/`stars` on as unexecuted DataFrames, so there is no
-    * point at which they could unpersist it themselves. Release is
-    * session-level, like every other query-layer persist (base / ex /
-    * idx in the dedup family): Bench/Verify clearState() between
-    * queries (`spark.catalog.clearCache()` + unpersist of all
-    * persistent RDDs). A long-lived interactive session composing
-    * guarded queries repeatedly should do the same.
+    * point at which they could unpersist it themselves. It is
+    * registered with [[graft.CacheReleases]] like every other
+    * query-layer persist, and released by `CacheReleases.releaseAll()`
+    * after the caller's terminal action.
     */
   def collapse(members: DataFrame, keyCol: String, idCol: String,
       payload: Seq[String], capSize: Int): (DataFrame, DataFrame) = {
@@ -129,7 +127,7 @@ object ClassGuard {
           .otherwise(array(col("_cr.rep"))).as("ids") +:
         payload.map(col)) :+ col("_cr.cls").as("cls") :+
         col("_cr.rep").as("_rep"): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(CacheReleases.persisted)
     // Boolean probe, not a collect: the driver learns ONE bit (any
     // mega class at all?); the mega keys themselves stay distributed
     // and reach the join below through Spark's broadcast machinery.

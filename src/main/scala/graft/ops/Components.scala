@@ -1,8 +1,8 @@
 package graft.ops
 
+import graft.CacheReleases
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed connected components over an undirected edge list —
   * the dup-cluster assembly kernel behind `q_dedup_components`.
@@ -103,8 +103,9 @@ object Components {
       maxStarRounds: Int = MaxStarRounds,
       uniqueOrderedPairs: Boolean = false): DataFrame = {
     if (escalateAfter == 0 && uniqueOrderedPairs) {
-      val cur0 = edges.select(col("v").as("u"), col("u").as("v"))
-        .localCheckpoint(eager = false) // starPhase's signature() materializes
+      // lazy: starPhase's signature() materializes it
+      val cur0 = CacheReleases.checkpointed(
+        edges.select(col("v").as("u"), col("u").as("v")), eager = false)
       return starPhase(cur0, maxStarRounds, () => ())
     }
     // Symmetric closure via ONE generate rather than a self-union: the
@@ -116,12 +117,12 @@ object Components {
         struct(col("u").as("u"), col("v").as("v")),
         struct(col("v").as("u"), col("u").as("v")))).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(CacheReleases.persisted)
 
     // ---- phase 1: min-label propagation, bounded rounds ----
     var labels = sym.groupBy(col("u")).agg(min(col("v")).as("nmin"))
       .select(col("u").as("vtx"), least(col("u"), col("nmin")).as("comp"))
-      .localCheckpoint(eager = false) // round 1's count materializes
+      .transform(CacheReleases.checkpointed(_, eager = false)) // round 1's count materializes
     // one propagation round: (vtx, comp) -> (vtx, comp', chg)
     def propagate(lab: DataFrame): DataFrame = {
       val fromNeighbors = sym
@@ -150,7 +151,7 @@ object Components {
       // AQE-off: q_dedup_components 4.98 → 5.69 s, q_dedup_apply
       // 4.24 → 4.88 s — a measured NEGATIVE, recorded here so it is
       // not retried).
-      val next = propagate(labels).localCheckpoint(eager = false)
+      val next = CacheReleases.checkpointed(propagate(labels), eager = false)
       converged = next.filter(col("chg")).count() == 0L
       labels = next.select(col("vtx"), col("comp"))
       rounds += 1
@@ -165,7 +166,7 @@ object Components {
     // u > v. Establish it on the input first.
     // lazy checkpoint: starPhase's signature() is the materializing action
     starPhase(sym.filter(col("u") > col("v")).distinct()
-        .localCheckpoint(eager = false),
+        .transform(CacheReleases.checkpointed(_, eager = false)),
       maxStarRounds, () => sym.unpersist(false))
   }
 
@@ -228,7 +229,8 @@ object Components {
     // under the pinned-conf block (withLoopConf scaladoc).
     withLoopConf(cur0, cur0.rdd.getNumPartitions) {
       while (!converged && rounds < maxStarRounds) {
-        val ss = oneRound(cur).localCheckpoint(eager = false) // signature() materializes
+        // lazy: signature() materializes it
+        val ss = CacheReleases.checkpointed(oneRound(cur), eager = false)
         val sig = signature(ss)
         converged = sig == prevSig && ss.exceptAll(cur).isEmpty
         prevSig = sig

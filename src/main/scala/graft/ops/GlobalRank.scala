@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.CacheReleases
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -41,7 +42,7 @@ object GlobalRank {
       .withColumn("__gr_pid", shiftright(col("__gr_mid"), PART_BITS.toInt))
       .withColumn("__gr_local",
         col("__gr_mid").bitwiseAND(lit((1L << PART_BITS) - 1)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(CacheReleases.persisted)
     val counts = ranged.groupBy(col("__gr_pid")).count()
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     val offsets = counts.scanLeft((-1L, 0L)) { case ((_, acc), (pid, n)) =>
@@ -78,7 +79,7 @@ object GlobalRank {
       .repartitionByRange(numParts, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
       .withColumn("__gr_pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(CacheReleases.persisted)
     // coalesce(sum, 0): an all-null delta partition aggregates to a
     // null sum, and a bare getLong would NPE at the driver (latent —
     // current callers pass lit(±1), but the contract allows nullable

@@ -5,7 +5,6 @@ import graft.pipeline.Etl2
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Entity resolution: exact match first, then a blocked fuzzy
   * (edit-distance) match on the residue, union of both. The one
@@ -73,8 +72,7 @@ object Resolution {
     val matched = obs.as("o")
       .join(broadcast(dim.select(dimId, exactKeys: _*)).as("d"), on(exactKeys), "left")
       .select(kept.map(k => col(s"o.$k")) :+ col(s"d.$dimId"): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    CacheReleases.register(matched)
+      .transform(CacheReleases.persisted)
 
     // 2. split: non-null side exact, null side residue
     val exact = matched.filter(col(dimId).isNotNull)

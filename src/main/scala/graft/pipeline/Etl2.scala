@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.CacheReleases
 import graft.ops.{Resolution, SizedWrite}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -197,9 +198,9 @@ object Etl2 {
     * frame goes to `CacheReleases` with every other builder's. */
   def run(spark: SparkSession, stagePath: String, outRoot: String): Unit =
     graft.Tables.withConf(spark, (graft.Q.Base ++ graft.Q.LegacyTime).toSeq: _*) {
-      val df = keyed(spark.read.parquet(stagePath)).cache()
+      val df = CacheReleases.persisted(keyed(spark.read.parquet(stagePath)))
       val (dv, dm, dr) = dimensions(df)
-      val dvCached = dv.cache()
+      val dvCached = CacheReleases.persisted(dv)
       try {
         val res = resolveVehicles(df, dvCached)
         val f = fact(df, res)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{CacheReleases, Q, Tables}
 import graft.ops.TextOps.words
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -283,7 +283,7 @@ object AnalyticsQueries {
       val terms = load(spark, dir, "documents")
         .select(explode(words(col("text"))).as("term"))
         .filter(length(col("term")) > 0)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       val skBytes = terms
         .agg(expr(s"count_min_sketch(term, ${eps}d, 0.99d, 42)").as("sk"))
         .head().getAs[Array[Byte]](0)
@@ -295,7 +295,7 @@ object AnalyticsQueries {
         .collect() // k-row driver probe against the sketch
       // both consumers (sketch agg + top-k) have run — the returned
       // frame is driver-built, so the cache can be dropped here rather
-      // than leaking until session clearState (round-14, guide §5)
+      // than holding it until the caller releases (round-14, guide §5)
       terms.unpersist(false)
       import spark.implicits._
       top.map { r =>
@@ -921,7 +921,7 @@ object AnalyticsQueries {
         .join(p, col("l_partkey") === col("p_partkey"))
         .groupBy(col("l_orderkey").as("o"))
         .agg(array_sort(collect_set(col("p_brand"))).as("bs"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       val na = byOrder.select(explode(col("bs")).as("b"))
         .groupBy("b").agg(count(lit(1)).as("n_i"))
       val tot = byOrder.agg(count(lit(1)).as("n_orders"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{CacheReleases, Q, Tables}
 import graft.ops.Multimodal
 import graft.streaming.EventOps
 import org.apache.spark.sql.functions._
@@ -313,7 +313,7 @@ object EventQueries {
         .select(col("event_type"), col("ts").cast("long").as("sec"),
           round(col("value") * 100).cast("long").as("cents"))
         .withColumn("day", expr("sec div 86400"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       val wins = e.select(col("event_type"), col("day").as("wday"))
         .filter(col("wday") % 7 === 0).distinct()
       // each 60h window [wday·86400+21600, wday·86400+237600) overlaps
@@ -512,7 +512,7 @@ object EventQueries {
       val userWeek = ev
         .select(col("user_id"), trunc(to_date(col("ts")), "week").as("week"))
         .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       val cohort = userWeek.groupBy("user_id").agg(min("week").as("cohort_week"))
       userWeek.join(cohort, Seq("user_id"))
         .select(col("cohort_week"),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{CacheReleases, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -59,11 +59,11 @@ object GraphQueries {
     "q_pagerank",
     (spark, dir) => {
       val edges = handoffEdges(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       val nodes = edges.select(col("src").as("node"))
         .union(edges.select(col("dst").as("node")))
         .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       val outdeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
       // edges⋈outdeg is round-invariant: materialize it once,
       // pre-partitioned by src, so each round's join exchanges only the
@@ -72,7 +72,7 @@ object GraphQueries {
       // parity). Edge-sized like `edges` itself — nothing new to spill.
       val contrib = edges.join(outdeg, Seq("src"))
         .repartition(col("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       // Materialize contrib (which fills the edges cache once,
       // transitively) and nodes, then release edges: every rank round
       // reads only contrib + nodes, so holding both edge-sized caches
@@ -167,7 +167,7 @@ object GraphQueries {
         .select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
         .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       val deg = und.select(col("a").as("node"))
         .unionAll(und.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("d"))
@@ -181,7 +181,7 @@ object GraphQueries {
         when(aOrd < bOrd, col("a")).otherwise(col("b")).as("src"),
         when(aOrd < bOrd, bOrd).otherwise(aOrd).as("dstOrd"))
         .select(col("src"), col("dstOrd.n").as("dst"), col("dstOrd"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       val o1 = oriented.select(col("src"), col("dst").as("v"), col("dstOrd").as("vOrd"))
       val o2 = oriented.select(col("src"), col("dst").as("w"), col("dstOrd").as("wOrd"))
       val wedges = o1.join(o2, Seq("src")).filter(col("vOrd") < col("wOrd"))

@@ -1,10 +1,9 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{CacheReleases, Q, Tables}
 import graft.ops.TextOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Similarity-join family beyond the Levenshtein cascade and the
   * approximate (LSH) dedup paths:
@@ -124,7 +123,7 @@ object SimilarityQueries {
       val docs = load(spark, dir, "documents").repartition(col("doc_id"))
       val base = docs.select(col("doc_id"),
         TextOps.shingleHashes(TextOps.words(col("text"))).as("hs"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       // class collapse (the jaccard/containment round-6 pattern): docs
       // with identical token SETS share every quantity AllPairs/PPJoin
       // computes — df contribution (class-weighted), set size, the
@@ -147,7 +146,7 @@ object SimilarityQueries {
       // same number from posting rows — round-10 P25 deleted them all)
       val tok = classes.select(col("k"), col("cls"), size(col("hs")).as("n"),
           explode(col("hs")).as("s"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       // df is DOCUMENT frequency: weight each class entry by class size
       val dfc = tok.groupBy("s").agg(sum(col("cls")).as("df"))
       val wrk = Window.partitionBy("k").orderBy(col("df").asc, col("s").asc)
@@ -163,7 +162,7 @@ object SimilarityQueries {
       val pref = ranked
         .filter(col("rk") <= col("n") - expr("(n*3 + 4) div 5") + 1)
         .filter(col("df") >= 2)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       val a = pref.select(col("k").as("ka"), col("s"),
         col("n").as("na"), col("rk").as("pa"))
       val b = pref.select(col("k").as("kb"), col("s"),

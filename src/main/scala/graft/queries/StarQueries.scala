@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{CacheReleases, Q, Tables}
 import graft.pipeline.{Etl1, Etl2}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -110,9 +110,9 @@ object StarQueries {
     // InMemoryRelation's pruned columnar reads beat row
     // deserialization across that many scans.)
     val df = Etl2.keyed(Etl1.stage(rawSynth(spark, dir)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(CacheReleases.persisted)
     val (dv, _, _) = Etl2.dimensions(df)
-    val dvC = dv.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val dvC = CacheReleases.persisted(dv)
     // Observation corruption AFTER the dim build (dims stay clean):
     // a suffix typo keeps the 2-char block key and stays at
     // levenshtein 1 from the row's own dim entry, so the fuzzy branch

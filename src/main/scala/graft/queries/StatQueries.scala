@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{CacheReleases, Q, Tables}
 import org.apache.spark.sql.functions._
 
 /** SQL-surface statistics family: the grouping-sets / reshape /
@@ -327,7 +327,7 @@ object StatQueries {
     (spark, dir) => {
       val cells = load(spark, dir, "documents")
         .groupBy("lang", "source").agg(count(lit(1)).as("o"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       val rt = cells.groupBy("lang").agg(sum("o").as("rt"))
       val ct = cells.groupBy("source").agg(sum("o").as("ct"))
       val tot = cells.agg(sum("o").as("n"),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{CacheReleases, Q, Tables}
 import graft.ops.TextOps._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
@@ -228,7 +228,7 @@ object TextQueries {
       // kernel (one call per row, no interpreted transform).
       val base = d.select(col("doc_id"),
         shingleHashes(words(col("text"))).as("hs"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       // CLASS COLLAPSE (round 6, the simhash lesson generalized):
       // docs with the same shingle SET are interchangeable for every
       // quantity downstream (df contributions, per-doc set size,
@@ -252,13 +252,13 @@ object TextQueries {
       val (classes, megaStars) = graft.ops.ClassGuard.collapse(
         keyed, "k", "doc_id", Seq("hs"), graft.ops.ClassGuard.cap(spark))
       val ex = classes.select(col("k"), col("cls"), explode(col("hs")).as("s"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       // df is DOCUMENT frequency: weight each class entry by class size
       val hot = ex.groupBy("s").agg(sum(col("cls")).as("df"))
         .filter(col("df") > DfCap).select("s")
       val idx = ex.join(broadcast(hot), Seq("s"), "left_anti")
         .select("k", "s")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       val nn = idx.groupBy("k").agg(count(lit(1)).as("n"))
       val shared = idx.select(col("k").as("ka"), col("s"))
         .join(idx.select(col("k").as("kb"), col("s")), Seq("s"))
@@ -368,7 +368,7 @@ object TextQueries {
     val base = d.select(col("doc_id"),
       shingleHashes(words(col("text"))).as("hs"))
       .withColumn("sig", minhashSignature(col("hs")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(CacheReleases.persisted)
     // candidate generation is PAYLOAD-FREE: only (doc_id, band, key)
     // enters the band self-join, so the shuffle is id-sized and the
     // pair distinct() hashes longs, not shingle arrays. The sets
@@ -881,7 +881,7 @@ object TextQueries {
       // and the per-doc shingle counts.
       val base = d.select(col("doc_id"),
         shingleHashes(words(col("text"))).as("hs"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       val ex = base.select(col("doc_id"), explode(col("hs")).as("s"))
       val bench = ex.filter(col("doc_id") % 50 === 0).select("s").distinct()
       val corpus = ex.filter(col("doc_id") % 50 =!= 0)
@@ -1037,7 +1037,7 @@ object TextQueries {
     (spark, dir) => {
       val pairs = ngramJaccardPairs(spark, dir)
         .select(col("doc_a").as("u"), col("doc_b").as("v"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       graft.ops.Components.connectedComponents(pairs)
         .select(col("vtx").as("doc_id"), col("comp").as("component"))
     },
@@ -1068,7 +1068,7 @@ object TextQueries {
     (spark, dir) => {
       val pairs = ngramJaccardPairs(spark, dir)
         .select(col("doc_a").as("u"), col("doc_b").as("v"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       val nonCanonical = graft.ops.Components.connectedComponents(pairs)
         .filter(col("vtx") =!= col("comp"))
         .select(col("vtx").as("doc_id"))
@@ -1122,7 +1122,7 @@ object TextQueries {
         md5(concat_ws(" ", slice(words(col("text")), 1, 5))).as("fp"))
       val hist = f.filter(col("doc_id") % 3 === 0)
         .groupBy("fp").agg(min(col("doc_id")).as("canonical"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       val newDocs = f.filter(col("doc_id") % 3 =!= 0)
       graft.ops.BloomOps.prefilteredJoin(hist, newDocs, "fp")
         .select(col("doc_id"), col("fp"), col("canonical"))
@@ -1158,7 +1158,7 @@ object TextQueries {
         md5(concat_ws(" ", slice(words(col("text")), 1, 5))).as("fp"))
       val hist = f.filter(col("doc_id") % 3 === 0)
         .groupBy("fp").agg(min(col("doc_id")).as("canonical"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       val newDocs = f.filter(col("doc_id") % 3 =!= 0)
       val nHist = hist.count() // materializes the persist; reused below
       val cap = math.max(64L, graft.ops.BloomOps.optimalBits(nHist) / 8)
@@ -1595,7 +1595,7 @@ object TextQueries {
         .filter(length(col("word")) > 0)
         .groupBy("word").agg(count(lit(1)).as("freq"))
         .select(col("freq"), expr("filter(split(word, ''), x -> x <> '')").as("syms"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       var cur = vocab0
       val merges = Seq.newBuilder[(Int, String, String, Long)]
       (1 to 3).foreach { r =>
@@ -1699,7 +1699,7 @@ object TextQueries {
         .groupBy("word").agg(count(lit(1)).as("freq"))
         .select(col("word"), col("freq"),
           expr("filter(split(word, ''), x -> x <> '')").as("syms"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       (1 to 3).foreach { _ =>
         val win = cur.filter(size(col("syms")) >= 2)
           .select(col("freq"), col("syms"),
@@ -1823,18 +1823,15 @@ object TextQueries {
         // v) otherwise re-run the regex tokenize over the corpus; the
         // persist makes it one pass (round 13 — values unchanged).
         // Both persists feed the RETURNED lazy plan, so the builder
-        // cannot unpersist them itself — registered for post-action
-        // release (round 14, VERDICT r13 item 8)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheReleases.register(d)
+        // cannot unpersist them itself; the caller releases them.
+        .transform(CacheReleases.persisted)
       val bg = d
         .select(col("doc_id"),
           explode(expr("sequence(1, size(w) - 1)")).as("i"), col("w"))
         .select(col("doc_id"),
           expr("element_at(w, i)").as("w1"),
           expr("element_at(w, i + 1)").as("w2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheReleases.register(bg)
+        .transform(CacheReleases.persisted)
       val c2 = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
       val c1 = bg.groupBy("w1").agg(count(lit(1)).as("c1"))
       val v = d.select(explode(col("w")).as("t")).distinct()
@@ -1954,7 +1951,7 @@ object TextQueries {
       val d = d0.unionByName(excerpts)
       val base = d.select(col("doc_id"),
         shingleHashes(words(col("text"))).as("hs"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       // class collapse, as in ngramJaccardPairs: identical shingle
       // sets are interchangeable for df, set size, shared counts, and
       // containment; the index/join pipeline runs at class cardinality
@@ -1969,12 +1966,12 @@ object TextQueries {
       val (classes, megaStars) = graft.ops.ClassGuard.collapse(
         keyed, "k", "doc_id", Seq("hs"), graft.ops.ClassGuard.cap(spark))
       val ex = classes.select(col("k"), col("cls"), explode(col("hs")).as("s"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       val hot = ex.groupBy("s").agg(sum(col("cls")).as("df"))
         .filter(col("df") > DfCap).select("s")
       val idx = ex.join(broadcast(hot), Seq("s"), "left_anti")
         .select("k", "s")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       val nn = idx.groupBy("k").agg(count(lit(1)).as("n"))
       val shared = idx.select(col("k").as("ka"), col("s"))
         .join(idx.select(col("k").as("kb"), col("s")), Seq("s"))
@@ -2095,7 +2092,7 @@ object TextQueries {
         .select(expr("element_at(w, i)").as("w1"),
           expr("element_at(w, i + 1)").as("w2"))
       val c12 = bi.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       val c1 = c12.groupBy("w1").agg(sum(col("c12")).as("c1"))
       val c2 = c12.groupBy("w2").agg(sum(col("c12")).as("c2"))
       val nb = c12.agg(sum(col("c12")).as("nb"))
@@ -2324,7 +2321,7 @@ object TextQueries {
       val tok = d.select(col("doc_id"),
         explode(call_function("graft_shingle_hashes_ne",
           words(col("text")))).as("s"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       val first = tok.groupBy("s").agg(min("doc_id").as("first_doc"))
       tok.join(first, Seq("s"))
         .groupBy("doc_id")
@@ -2427,7 +2424,7 @@ object TextQueries {
       val base = d.select(col("doc_id"),
         shingleHashes(words(col("text"))).as("hs"))
         .withColumn("sig", minhashSignature(col("hs")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       // --- LSH candidates (bands x rows from the planner config) ---
       val bandCols = base.select(col("doc_id"),
         explode(array((0 until bands).map(j =>
@@ -2440,14 +2437,14 @@ object TextQueries {
           Seq("band", "key"))
         .filter(col("doc_a") < col("doc_b"))
         .select("doc_a", "doc_b").distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       // --- exact truth at t = tn/td via prefix filtering ---
       // n = |token set| rides the explode as size(hs) (the simjoin
       // round-10 carry): the unordered per-doc window COUNT was a
       // second WindowExec pass over the sorted postings
       val tok = base.select(col("doc_id"), size(col("hs")).as("n"),
           explode(col("hs")).as("s"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       val dfc = tok.groupBy("s").agg(count(lit(1)).as("df"))
       val wrk = org.apache.spark.sql.expressions.Window
         .partitionBy("doc_id").orderBy(col("df").asc, col("s").asc)
@@ -2494,7 +2491,7 @@ object TextQueries {
         .filter(col("shared") * td >=
           (col("na") + col("nb") - col("shared")) * tn)
         .select("doc_a", "doc_b")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       // --- metrics (pair-id-sized joins) ---
       val hit = truth.join(cand, Seq("doc_a", "doc_b"), "left_semi")
       val nT = truth.agg(count(lit(1)).as("n_truth"))

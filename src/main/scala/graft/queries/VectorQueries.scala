@@ -285,7 +285,7 @@ object VectorQueries {
         .select(col("vec_id"),
           graft.ops.KMeans.quantize1000(col("vn")).as("vq"))
         // seeds + update + final assignment each act on this lineage
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       graft.ops.KMeans.lloydAssign(e, "vq", "vec_id", 4, Dims, 2, "cluster")
         .groupBy("cluster")
         .agg(count(lit(1)).as("n_vecs"), min("vec_id").as("min_vec_id"))
@@ -414,9 +414,8 @@ object VectorQueries {
           slice(col("vq"), m * PqSub + 1, PqSub).as(s"vq_$m")): _*)
         // one seed action + one update pass serve ALL subspaces
         // (lloydTrainMulti); the persisted lineage is read ~3 times
-        // total instead of ~9; registered for release (round 13)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      CacheReleases.register(base)
+        // total instead of ~9 (round 13)
+        .transform(CacheReleases.persisted)
       val vqCols = (0 until PqM).map(m => s"vq_$m")
       val cents = graft.ops.KMeans.lloydTrainMulti(base, vqCols, "vec_id", PqK, PqSub, 2)
       val cur = graft.ops.KMeans.assignMulti(base, "vq", cents,
@@ -470,10 +469,7 @@ object VectorQueries {
     * broadcast with the query set, and scoring is M integer-indexed
     * branches in codegen. Training + encoding reuse the PQ
     * machinery; the scan cost is O(corpus × M), not O(corpus × Dims).
-    *
-    * The frames it persists belong to the RETURNED plan, so they are
-    * registered in [[CacheReleases]] for release after the caller's
-    * terminal action. */
+    * The frames it persists belong to the RETURNED plan. */
   private def pqAdcTopk(spark: SparkSession, dir: String): DataFrame = {
     val base = withNormalizedNative(load(spark, dir, "embeddings"), "embedding", "vn")
       .select(col("vec_id"), col("vn"),
@@ -482,11 +478,9 @@ object VectorQueries {
         slice(col("vq"), m * PqSub + 1, PqSub).as(s"vq_$m")): _*)
       // persisted for the TRAINING actions AND the post-training
       // consumers (encode scan, query table — each would otherwise
-      // re-derive the row-local prep); registered for release like
-      // the corpus barrier below (round 13 — the
+      // re-derive the row-local prep; round 13 — the
       // unpersist-after-training form re-derived prep twice).
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    CacheReleases.register(base)
+      .transform(CacheReleases.persisted)
     val cents = graft.ops.KMeans.lloydTrainMulti(base,
       (0 until PqM).map(m => s"vq_$m"), "vec_id", PqK, PqSub, PqIters)
     val coded = graft.ops.KMeans.assignMulti(base, "vq", cents,
@@ -498,8 +492,7 @@ object VectorQueries {
     // interpreted (measured: 2.3-5.4 s → ~1 s at sf0.1)
     val corpus = coded.select(col("vec_id") +:
       (0 until PqM).map(m => col(s"code_$m")): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    CacheReleases.register(corpus)
+      .transform(CacheReleases.persisted)
     // per-query ADC table: d[m·k+j] = q-subvector · codeword j of
     // subspace m, computed ONCE per query as a single native-
     // expression array (exact vn doubles, left-assoc i order —
@@ -592,7 +585,7 @@ object VectorQueries {
       val e = withNormalizedNative(load(spark, dir, "embeddings"), "embedding", "vn")
         .select(col("vec_id"), col("vn"))
         .withColumn("vq", graft.ops.KMeans.quantize1000(col("vn")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       val assigned = graft.ops.KMeans
         .lloydAssign(e, "vq", "vec_id", 4, Dims, 2, "cluster")
         .select(col("cluster"), col("vec_id"), col("vn"))
@@ -644,7 +637,7 @@ object VectorQueries {
       // lexical side: df-capped distinct-word inverted index
       val toks = load(spark, dir, "documents").repartition(col("doc_id"))
         .select(col("doc_id"), explode(array_distinct(words(col("text")))).as("term"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       val hot = toks.groupBy("term").agg(count(lit(1)).as("df"))
         .filter(col("df") > DfCap).select("term")
       val idx = toks.join(broadcast(hot), Seq("term"), "left_anti")
@@ -1015,7 +1008,7 @@ object VectorQueries {
           struct(col("vec_a").as("u"), col("vec_b").as("v")),
           struct(col("vec_b").as("u"), col("vec_a").as("v")))).as("e"))
         .select(col("e.u").as("u"), col("e.v").as("v"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       def spread(lab: org.apache.spark.sql.DataFrame, r: Int): org.apache.spark.sql.DataFrame = {
         val nbr = edges
           .join(lab.select(col("vec_id").as("v"), col("lab")), Seq("v"))
@@ -1027,7 +1020,7 @@ object VectorQueries {
           .select(col("u").as("vec_id"), col("lab"), lit(r.toLong).as("rnd"))
       }
       val l1 = seeds.union(spread(seeds, 1))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       l1.union(spread(l1, 2))
     },
     Some(s"""WITH $knnSqlCtes,
@@ -1151,12 +1144,9 @@ object VectorQueries {
         graft.ops.KMeans.quantize1000(col("vn")).as("vq"))
       // persisted for the TRAINING actions and the two downstream
       // consumers (corpus assign, query probes), which would otherwise
-      // re-derive the row-local normalize+quantize from the scan;
-      // registered for release (round 13 — the registry pattern
-      // replaces the unpersist-after-training form, same leak
-      // guarantee).
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    CacheReleases.register(base)
+      // re-derive the row-local normalize+quantize from the scan
+      // (round 13).
+      .transform(CacheReleases.persisted)
     val cents = graft.ops.KMeans.lloydTrain(base, "vq", "vec_id", IvfK, Dims, 2)
     val corpus = graft.ops.KMeans.assign(base, "vq", cents, "cell")
       .select(col("vec_id"), col("vn"), col("cell"))
@@ -1406,10 +1396,9 @@ object VectorQueries {
       .select(col("vec_id") +: col("vn") +: col("vq") +: (0 until PqM).map(m =>
         slice(col("vq"), m * PqSub + 1, PqSub).as(s"vq_$m")): _*)
       // persisted for the TRAINING actions and the downstream
-      // consumers (corpus encode, probe side, re-rank vectors);
-      // registered for release like the corpus barrier (round 13)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    CacheReleases.register(base)
+      // consumers (corpus encode, probe side, re-rank vectors;
+      // round 13)
+      .transform(CacheReleases.persisted)
     // cells + codebooks trained JOINTLY: one seed collect serves both
     // and the two update aggregates overlap (2 driver actions instead
     // of 4; values identical — see lloydTrainJoint)
@@ -1419,14 +1408,13 @@ object VectorQueries {
       "vec_id", Dims, IvfK, vqCols, PqSub, PqK, 2, PqIters)
     // corpus index: cell + M codes, materialized once (the same
     // codegen barrier as pqAdcTopk — assignment projections must not
-    // fuse into the rank sort) and registered for release
+    // fuse into the rank sort)
     val coded = graft.ops.KMeans.assignMulti(
       graft.ops.KMeans.assign(base, "vq", cells, "cell"),
       "vq", books, (0 until PqM).map(m => s"code_$m"))
     val corpus = coded.select(col("vec_id") +: col("cell") +:
       (0 until PqM).map(m => col(s"code_$m")): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    CacheReleases.register(corpus)
+      .transform(CacheReleases.persisted)
     // query side: rank ALL cells with the assignment metric, probe the
     // IvfPqProbe best; the per-query ADC table rides along (one array
     // per query row, broadcast)

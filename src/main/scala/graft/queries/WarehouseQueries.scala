@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{CacheReleases, Q, Tables}
 import org.apache.spark.sql.functions._
 
 /** Warehouse-maintenance operator family: the queries a team RUNNING
@@ -358,7 +358,7 @@ object WarehouseQueries {
     (spark, dir) => {
       val old = oldSnapshot(spark, dir)
       val changes = snapshotChanges(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheReleases.persisted)
       val removedKeys = changes
         .filter(col("change_type").isin("delete", "update"))
         .select(col("o_orderkey"))

@@ -3,6 +3,7 @@ package graft.sources
 import java.net.URLDecoder
 import java.nio.charset.StandardCharsets
 
+import graft.CacheReleases
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -86,8 +87,7 @@ object Ingest {
           try out.write(bytes) finally out.close()
           (d.filename, bytes.length.toLong)
         }
-      }.toDF("filename", "n_bytes")
-    received.cache()
+      }.toDF("filename", "n_bytes").transform(CacheReleases.persisted)
     received.count() // materialize: the writes are the effect
     received
   }

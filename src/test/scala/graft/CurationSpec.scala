@@ -577,7 +577,7 @@ class CurationSpec extends SparkSpec {
       assert(top3(a).contains((b, bp)) && top3(b).contains((a, bp)),
         s"edge ($a,$b,$bp) not mutual in independently recomputed top-3")
     }
-    Harness.clearState(spark)
+    Harness.clearState()
   }
 
   test("q_semantic_clusters is consistent with the mutual-kNN edge set") {
@@ -597,7 +597,7 @@ class CurationSpec extends SparkSpec {
     clusters.groupBy(_._2).foreach { case (label, members) =>
       assert(label == members.keys.min, s"cluster $label label != min member")
     }
-    Harness.clearState(spark)
+    Harness.clearState()
   }
 
   test("q_audio_frames: frame sums recombine to q_multimodal_audio sample sums") {

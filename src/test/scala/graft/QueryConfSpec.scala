@@ -58,7 +58,7 @@ class QueryConfSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val caller = defaultCaller()
     declaring.foreach { q =>
       buildOn(caller, q.name)
-      Harness.clearState(spark)
+      Harness.clearState()
     }
   }
 
@@ -75,12 +75,12 @@ class QueryConfSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     cheapest.foreach { n =>
       assert(SparkEntry.registry.exists(q => q.name == n && q.conf.isEmpty), n)
       buildOn(caller, n)
-      Harness.clearState(spark)
+      Harness.clearState()
     }
     // sizeOfNull, nanosAsLong and a graft_* function, on the clone
     Seq("q_jsonl_scan", "q_events_window", "q_vec_quantize").foreach { n =>
       assert(rows(buildOn(caller, n)) == rows(SparkEntry.queries(n)(spark, dir)), n)
-      Harness.clearState(spark)
+      Harness.clearState()
     }
   }
 
@@ -88,7 +88,7 @@ class QueryConfSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val names = Seq("q_star_fact", "q_fact_assembly")
     val serial = names.map { n =>
       val r = rows(SparkEntry.queries(n)(spark, dir))
-      Harness.clearState(spark)
+      Harness.clearState()
       r
     }
     // both built before either runs: building the second must not
@@ -103,7 +103,7 @@ class QueryConfSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(!fused(star), "q_star_fact must run without whole-stage fusion")
     assert(fused(fact), "q_fact_assembly must keep whole-stage fusion")
     assert(parallel == serial, "concurrent results must match serial ones")
-    Harness.clearState(spark)
+    Harness.clearState()
   }
 
   test("flagged query results are identical under both codegen modes") {
@@ -113,6 +113,6 @@ class QueryConfSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       rows(df)
     }
     assert(run("true") == run("false"), "codegen mode must not change results")
-    Harness.clearState(spark)
+    Harness.clearState()
   }
 }

@@ -10,8 +10,9 @@ import scala.jdk.CollectionConverters._
   * `Q.conf` or `Tables.withConf`, and the base conf is applied where a
   * session is set up, not per build; the fuzzy match is
   * `Resolution.resolve`; the office pattern and the date shapes are
-  * `Repair` and `DateParse` in `CoreOps.scala`. The Scala-code
-  * patterns do not match the single-quoted oracle SQL. */
+  * `Repair` and `DateParse` in `CoreOps.scala`; a frame is cached
+  * only through `CacheReleases`. The Scala-code patterns do not match
+  * the single-quoted oracle SQL. */
 class SourceGuardSpec extends AnyFunSuite {
   /** (shown in the test name, regex, the only file it may appear in) */
   private val homes = Seq(
@@ -19,7 +20,10 @@ class SourceGuardSpec extends AnyFunSuite {
     literal("levenshtein(col(", "Resolution.scala"),
     literal("\"(?i)^(RTA", "CoreOps.scala"),
     literal("""rlike("^\\d{2}/""", "CoreOps.scala"),
-    literal("ensureConf(", "Tables.scala"))
+    literal("ensureConf(", "Tables.scala"),
+    literal(".persist(", "CacheReleases.scala"),
+    literal(".cache()", "CacheReleases.scala"),
+    literal(".localCheckpoint(", "CacheReleases.scala"))
 
   private def literal(text: String, home: String) = (text, Pattern.quote(text), home)
 

@@ -14,12 +14,12 @@ object BenchSome {
     names.foreach { name =>
       try Harness.runFully(spark, name, dir) catch { case e: Throwable =>
         println(f"$name%-24s WARMUP FAIL: ${e.getMessage}") }
-      Harness.clearState(spark)
+      Harness.clearState()
       val ts = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
         Harness.runFully(spark, name, dir)
         val dt = (System.nanoTime() - t0) / 1e9
-        Harness.clearState(spark)
+        Harness.clearState()
         dt
       }.sorted
       println(f"$name%-24s median ${ts(1)}%7.2f s  (min ${ts.head}%.2f / max ${ts.last}%.2f)")

@@ -14,7 +14,7 @@ object P47 {
     val names = args.drop(1)
     val spark = Harness.session(32)
     names.foreach { name =>
-      Harness.runFully(spark, name, dir); Harness.clearState(spark) // warm
+      Harness.runFully(spark, name, dir); Harness.clearState() // warm
       val hist = mutable.HashMap[String, Int]().withDefaultValue(0)
       @volatile var sampling = true
       val sampler = new Thread(() => {
@@ -45,7 +45,7 @@ object P47 {
       val wall = (System.nanoTime() - t0) / 1e9
       sampling = false
       sampler.join(1000)
-      Harness.clearState(spark)
+      Harness.clearState()
       println(f"== $name wall=$wall%.2f s (50ms samples) ==")
       hist.toSeq.sortBy(-_._2).take(30).foreach { case (k, c) =>
         println(f"  $c%4d  $k")

@@ -27,7 +27,7 @@ object Plans {
       } catch { case e: Throwable =>
         println(s"[plans] FAIL $name: ${e.getMessage}")
       }
-      Harness.clearState(spark)
+      Harness.clearState()
     }
     spark.stop()
   }
