@@ -10,13 +10,17 @@ object Harness {
   /** Local session on `cpus` threads (one shuffle partition per
     * thread), under [[Q.Base]] with the native functions registered,
     * AQE on, no UI; so a query without its own conf builds on it
-    * directly. Log level ERROR: each released local checkpoint (the
+    * directly. The static keys of [[Q.Static]] (the generated-class
+    * cache size) go through the builder, Spark's route for static conf;
+    * they hold for the JVM when this is its first session to compile
+    * a query. Log level ERROR: each released local checkpoint (the
     * Components rounds, the SCD2 fold) logs a harmless "cannot be
     * recomputed after unpersisting" WARN line. */
   def session(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config(Q.Static)
       .config(Q.Base)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")

@@ -8,25 +8,8 @@ import org.apache.spark.sql.functions._
   * Etl1 stage → Etl2 gold, asserting the star-schema invariants the
   * reference's warehouse DDL implies (starschema_dw.txt:56-66 FKs). */
 class RtaPipelineSpec extends SparkSpec {
+  import RtaPipelineSpec._
   import spark.implicits._
-
-  private val header = "slno,tempRegistrationNumber,fromdate,todate,OfficeCd,makerName,modelDesc,fuel,makeYear,colour,vehicleClass,seatCapacity"
-  private val rows = Seq(
-    // normal rows, incl. a duplicate registration (newest 2021 wins)
-    "1,TR001,01/02/2020,01/02/2035,OFFICE1,MARUTI.,SWIFT VDI BS IV,PETROL,2019,RED,LMV,5",
-    "2,TR001,01/02/2021,01/02/2036,OFFICE1,MARUTI,SWIFT VDI BS IV,PETROL,2019,RED,LMV,5",
-    // misaligned: office name landed in fromdate → repaired then
-    // dropped by the validity gate (no date left)
-    "3,TR002,RTA HYDERABAD,01/02/2035,,TATA,NEXON EV,BATTERY,2020,BLUE,LMV,5",
-    // TS state code → nulled, then backfilled from fromdate
-    "4,TR003,02/03/2021,02/03/2036,TS,HYUNDAI,I20 SPORTZ,DIESEL,,WHITE,LMV,5",
-    // dot-separated date + 2-digit year + year also in modelDesc
-    "5,TR004,03.04.2021,,OFFICE2,HONDA,CITY 2018 ZX,PETROL,18,BLACK,LMV,5",
-    // trailer
-    "6,TR005,04/05/2021,04/05/2036,OFFICE2,ASHOK LEYLAND,WATER TANKER 6000L,DIESEL,2017,YELLOW,HGV,2",
-    // unparseable date → dropped by validity gate
-    "7,TR006,junk,junk,OFFICE3,KIA,SELTOS HTK,PETROL,2021,GREY,LMV,5"
-  )
 
   private val policy = "spark.sql.legacy.timeParserPolicy"
   private val ansi = "spark.sql.ansi.enabled"
@@ -35,12 +18,9 @@ class RtaPipelineSpec extends SparkSpec {
     * the two jobs (preset to CORRECTED and ANSI on for them, as on a
     * default Spark session; the jobs scope their own conf). */
   private lazy val (dirs, policyAfterRuns, ansiAfterRuns) = {
-    val root = java.nio.file.Files.createTempDirectory("graft-e2e").toString
-    val csv = s"$root/raw.csv"
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(csv),
-      (header +: rows).mkString("\n"))
+    val root = fixtureDir()
     Tables.withConf(spark, policy -> "CORRECTED", ansi -> "true") {
-      Etl1.run(spark, csv, s"$root/stage")
+      Etl1.run(spark, s"$root/raw.csv", s"$root/stage")
       Etl2.run(spark, s"$root/stage", s"$root/gold")
       (root, spark.conf.get(policy), spark.conf.get(ansi))
     }
@@ -247,5 +227,33 @@ class RtaPipelineSpec extends SparkSpec {
     CacheReleases.releaseAll()
     assert(cached <= before,
       "Etl2.run must unpersist its frames or register them with CacheReleases")
+  }
+}
+
+object RtaPipelineSpec {
+  val header = "slno,tempRegistrationNumber,fromdate,todate,OfficeCd,makerName,modelDesc,fuel,makeYear,colour,vehicleClass,seatCapacity"
+  val rows = Seq(
+    // normal rows, incl. a duplicate registration (newest 2021 wins)
+    "1,TR001,01/02/2020,01/02/2035,OFFICE1,MARUTI.,SWIFT VDI BS IV,PETROL,2019,RED,LMV,5",
+    "2,TR001,01/02/2021,01/02/2036,OFFICE1,MARUTI,SWIFT VDI BS IV,PETROL,2019,RED,LMV,5",
+    // misaligned: office name landed in fromdate → repaired then
+    // dropped by the validity gate (no date left)
+    "3,TR002,RTA HYDERABAD,01/02/2035,,TATA,NEXON EV,BATTERY,2020,BLUE,LMV,5",
+    // TS state code → nulled, then backfilled from fromdate
+    "4,TR003,02/03/2021,02/03/2036,TS,HYUNDAI,I20 SPORTZ,DIESEL,,WHITE,LMV,5",
+    // dot-separated date + 2-digit year + year also in modelDesc
+    "5,TR004,03.04.2021,,OFFICE2,HONDA,CITY 2018 ZX,PETROL,18,BLACK,LMV,5",
+    // trailer
+    "6,TR005,04/05/2021,04/05/2036,OFFICE2,ASHOK LEYLAND,WATER TANKER 6000L,DIESEL,2017,YELLOW,HGV,2",
+    // unparseable date → dropped by validity gate
+    "7,TR006,junk,junk,OFFICE3,KIA,SELTOS HTK,PETROL,2021,GREY,LMV,5"
+  )
+
+  /** Write the fixture as `raw.csv` under a new temp dir; returns the dir. */
+  def fixtureDir(): String = {
+    val root = java.nio.file.Files.createTempDirectory("graft-e2e").toString
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$root/raw.csv"),
+      (header +: rows).mkString("\n"))
+    root
   }
 }

@@ -11,7 +11,8 @@ import scala.jdk.CollectionConverters._
   * session is set up, not per build; the fuzzy match is
   * `Resolution.resolve`; the office pattern and the date shapes are
   * `Repair` and `DateParse` in `CoreOps.scala`; a frame is cached
-  * only through `CacheReleases`. The Scala-code patterns do not match
+  * only through `CacheReleases`; the codegen cache size is set only on
+  * `Q.Static`. The Scala-code patterns do not match
   * the single-quoted oracle SQL. */
 class SourceGuardSpec extends AnyFunSuite {
   /** (shown in the test name, regex, the only file it may appear in) */
@@ -23,7 +24,8 @@ class SourceGuardSpec extends AnyFunSuite {
     literal("ensureConf(", "Tables.scala"),
     literal(".persist(", "CacheReleases.scala"),
     literal(".cache()", "CacheReleases.scala"),
-    literal(".localCheckpoint(", "CacheReleases.scala"))
+    literal(".localCheckpoint(", "CacheReleases.scala"),
+    literal("spark.sql.codegen.cache.maxEntries", "Tables.scala"))
 
   private def literal(text: String, home: String) = (text, Pattern.quote(text), home)
 
