@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Fixture-table access, staging paths and the session-conf helpers.
   * The conf the whole engine assumes is [[Q.Base]]: [[Harness]]
@@ -230,10 +231,49 @@ object Tables {
     s
   }
 
+  /** Read fixture table `name` from `sfDir`. Each file's schema is
+    * inferred once, by [[fixtureSchema]], and the read supplies it, so a
+    * repeated build runs no Spark job here (inference launches one per
+    * read: 50–86 ms at p50 against 6.7–11 ms with the schema supplied,
+    * 60 reads each on a warm JVM, 4-core host).
+    *
+    * Precondition: a fixture rewritten in place shows as a new
+    * [[fixtureStamp]], that is, with a new modification time or length.
+    * A rewrite that keeps both reads with the old schema. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     touchNs()
-    if (name == "events") loadEvents(spark, sfDir) else
-      spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val raw = spark.read.schema(fixtureSchema(spark, path)).parquet(path)
+    if (name == "events") eventsAsMicros(raw) else raw
+  }
+
+  /** A fixture's modification time and length, read through Hadoop's
+    * `FileSystem`, so a remote URI gets a real stamp. (A Parquet
+    * directory's time changes when an overwrite replaces its part
+    * files.) Memo keys carry it next to the path, so a fixture
+    * regenerated in place invalidates what was derived from the old
+    * bytes. */
+  def fixtureStamp(spark: SparkSession, path: String): (Long, Long) = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    (st.getModificationTime, st.getLen)
+  }
+
+  private val fixtureSchemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, (Long, Long), Map[String, String]), StructType]()
+
+  /** What `spark.read.parquet(path).schema` infers, memoized per path,
+    * [[fixtureStamp]] and the session's explicitly set Parquet and
+    * case-sensitivity keys, which change what inference returns
+    * (`nanosAsLong` reads a TIMESTAMP(NANOS) `events.ts` as a long;
+    * without it inference fails). */
+  private[graft] def fixtureSchema(spark: SparkSession, path: String): StructType = {
+    val inference = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive"
+    }
+    fixtureSchemas.computeIfAbsent((path, fixtureStamp(spark, path), inference),
+      _ => spark.read.parquet(path).schema)
   }
 
   /** `events.parquet` carries TIMESTAMP(NANOS), read as raw longs under
@@ -241,13 +281,11 @@ object Tables {
     * microseconds — the fixture generator emits µs-granular values, so
     * the narrowing is lossless. `div` (integral divide) is load-bearing:
     * a double-typed `/` on ~1.7e18 ns loses precision past 2^53. */
-  private def loadEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+  private def eventsAsMicros(raw: DataFrame): DataFrame =
+    if (raw.schema("ts").dataType == LongType)
       raw.withColumn("ts", org.apache.spark.sql.functions.expr(
         "timestamp_micros(ts div 1000)"))
     else raw
-  }
 
   val all: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
@@ -304,8 +342,17 @@ object Q {
     // With the session pinned to UTC the two flavors are numerically
     // identical, so read both as TIMESTAMP.
     "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
-    // events' TIMESTAMP(NANOS) as raw longs; see Tables.loadEvents
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+    // events' TIMESTAMP(NANOS) as raw longs; see Tables.load
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // Each `SessionClone` gets its own session artifact state, so the
+    // executor tasks of a query that builds on a clone run under a new
+    // class loader, and that loader is part of `CodeGenerator`'s cache
+    // key: every such build recompiled every class it had compiled
+    // before. A second 163-query pass at sf0.01 compiled 638 classes
+    // with isolation on and 65 with it off. The engine adds no
+    // session-scoped artifacts (jars, files, archives), so nothing
+    // depends on the isolation.
+    "spark.sql.artifact.isolation.enabled" -> "false")
 
   /** Static SQL conf: keys Spark reads once per JVM, which
     * `spark.conf.set` refuses, so they cannot ride on [[Base]] through
@@ -322,7 +369,7 @@ object Q {
     * pass over all 163 registered queries compiles 2,421 distinct
     * classes at sf0.01; 4096 keeps that whole working set resident,
     * with room for the classes some queries compile anew on each run
-    * (about 600 per full pass). The memory is the classes
+    * (65 on a second full pass). The memory is the classes
     * themselves, and it is no more than the default's: after two
     * 163-query passes at sf0.01, metaspace held 232 MB at 4096 against
     * 245 MB at 100, whose recompiles each load a new class. */

@@ -32,23 +32,15 @@ object VectorQueries {
     * queries need ONE scalar (the count) before the plan is built, and
     * the bench re-builds each query many times per JVM — so the count
     * job runs once per fixture instead of once per pass. The key
-    * carries the fixture's mtime stamp alongside the path (round-12
-    * ADVICE): regenerating a dir IN PLACE at a different size (e.g.
-    * /tmp/sf10 rebuilt between P34 runs in one long-lived session)
-    * changes the stamp and re-counts, so the memoized plane count can
-    * no longer silently diverge from the oracle's live COUNT(*).
-    * Non-local fixture URIs stamp 0 and fall back to path-only
-    * memoization — the original contract (immutable per session). */
-  private def fixtureStamp(dir: String): Long = {
-    val f = new java.io.File(s"$dir/embeddings.parquet")
-    // a parquet DIRECTORY's mtime changes too: overwrite rewrites
-    // differently-named part files, which touches the dir entry list
-    f.lastModified()
-  }
+    * carries the fixture's stamp alongside the path (round-12 ADVICE):
+    * regenerating a dir IN PLACE at a different size (e.g. /tmp/sf10
+    * rebuilt between P34 runs in one long-lived session) changes the
+    * stamp and re-counts, so the memoized plane count can no longer
+    * silently diverge from the oracle's live COUNT(*). */
   private val corpusSizes =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
+    new java.util.concurrent.ConcurrentHashMap[(String, (Long, Long)), java.lang.Long]()
   private def corpusSize(spark: SparkSession, dir: String): Long =
-    corpusSizes.computeIfAbsent((dir, fixtureStamp(dir)),
+    corpusSizes.computeIfAbsent((dir, Tables.fixtureStamp(spark, s"$dir/embeddings.parquet")),
       _ => load(spark, dir, "embeddings").count()).longValue()
 
   /** Corpus-adaptive bucket CTEs shared by the pair-kernel oracles:

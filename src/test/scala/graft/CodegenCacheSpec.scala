@@ -6,7 +6,9 @@ import org.apache.spark.metrics.source.CodegenMetrics
 /** The generated-class cache holds a whole pipeline run: `Q.Static`
   * sizes it above Spark's default of 100 entries, which one
   * `Etl1.run` + `Etl2.run` exceeds, so with the default every later run
-  * recompiles the classes the LRU cache evicted. */
+  * recompiles the classes the LRU cache evicted. A query that declares
+  * `Q.conf` builds on a session clone; with artifact isolation off
+  * (`Q.Base`) its tasks keep the class loader the cache is keyed on. */
 class CodegenCacheSpec extends SparkSpec {
   private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
@@ -22,6 +24,18 @@ class CodegenCacheSpec extends SparkSpec {
     round()
     val second = round()
     assert(second == 0, s"second run compiled $second classes")
+  }
+
+  test("a second build of a query on a session clone compiles no generated class") {
+    def round(): Long = {
+      val c0 = compiles()
+      Harness.runFully(spark, "q_date_parse_yy", "/root/testdata/sf0.001")
+      Harness.clearState()
+      compiles() - c0
+    }
+    round()
+    val second = round()
+    assert(second == 0, s"second build compiled $second classes")
   }
 
   test("ensureConf writes the static keys on a session built elsewhere") {

@@ -12,8 +12,8 @@ import scala.jdk.CollectionConverters._
   * `Resolution.resolve`; the office pattern and the date shapes are
   * `Repair` and `DateParse` in `CoreOps.scala`; a frame is cached
   * only through `CacheReleases`; the codegen cache size is set only on
-  * `Q.Static`. The Scala-code patterns do not match
-  * the single-quoted oracle SQL. */
+  * `Q.Static`, and artifact isolation only on `Q.Base`. The Scala-code
+  * patterns do not match the single-quoted oracle SQL. */
 class SourceGuardSpec extends AnyFunSuite {
   /** (shown in the test name, regex, the only file it may appear in) */
   private val homes = Seq(
@@ -25,7 +25,8 @@ class SourceGuardSpec extends AnyFunSuite {
     literal(".persist(", "CacheReleases.scala"),
     literal(".cache()", "CacheReleases.scala"),
     literal(".localCheckpoint(", "CacheReleases.scala"),
-    literal("spark.sql.codegen.cache.maxEntries", "Tables.scala"))
+    literal("spark.sql.codegen.cache.maxEntries", "Tables.scala"),
+    literal("spark.sql.artifact.isolation.enabled", "Tables.scala"))
 
   private def literal(text: String, home: String) = (text, Pattern.quote(text), home)
 
